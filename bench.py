@@ -32,16 +32,9 @@ BENCH_FILES = int(os.environ.get("SPARK_GRAFT_BENCH_FILES", "200000"))
 CORPUS_SEED = 91
 
 def _bench_cfg():
-    """Default pipeline config, with the S5 persist strategy overridable via
-    SPARK_GRAFT_REFINE_PERSIST (deser/ser/off) for the A/B children --
-    VERDICT r4 next#3."""
     from lsh_for_source_code_spark.config import PipelineConfig
 
-    kw = {}
-    rp = os.environ.get("SPARK_GRAFT_REFINE_PERSIST")
-    if rp:
-        kw["refine_work_persist"] = rp
-    return PipelineConfig(**kw)
+    return PipelineConfig()
 
 
 HEADLINE = [
@@ -476,9 +469,8 @@ the stage's irreducible profile -- the only stage that both populates
 a multi-GB cache and runs two salted shuffle rounds over the exploded
 table, i.e. memory-bus-bound work a single box cannot parallelize
 (same host-saturation signature as the raw-numpy envelope above).
-`refine_work_persist=deser` stays the default (best absolute wall);
-the knob ships for cluster operators with different recompute-vs-cache
-economics.
+The deserialized persist stays (best absolute wall); the storage-
+strategy knob was later removed because no config or workload set it.
 
 ## Corpus-size scaling (data axis, r5)
 

@@ -149,7 +149,7 @@ def pipeline_stages():
         StorageLevel.MEMORY_AND_DISK
     )
     timed("S5_candidates", cands.count)
-    verified = verify_pairs(cands, shingled, cfg, signed=signed).persist(
+    verified = verify_pairs(cands, shingled, cfg).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     timed("S6_verify", verified.count)

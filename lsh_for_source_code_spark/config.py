@@ -127,57 +127,6 @@ class PipelineConfig:
     # level 2 on) reaches type2 0.945 / family-stratum 0.9913 at 143s
     # pipeline wall (L=3: 0.927/0.9886 at 108s; emit-cap only at the last
     # level: 0.883/0.9816 at 100s). 0 disables.
-    salt_partitions: int = 16     # salting factor for mega-bucket repartition
-    min_band_agreement: int = 1
-    # OPTIONAL precision/cost knob: candidate pairs must share >= this many
-    # SMALL-bucket LSH bands to reach exact verification (star anchor pairs
-    # exempt). The textbook >=2-band rule is NOT recall-safe under the
-    # mega-bucket star cap: bands matching inside capped buckets don't
-    # count, so true pairs whose shared bands are mostly mega (boilerplate-
-    # heavy corpora) can carry agreement 1. MEASURED on the 20k synthetic
-    # corpus: agreement=2 cut verify input hard but cost 55% of true pairs
-    # / 29% of cluster-level recall -- hence default 1 (loss-free). Raise
-    # only when banding is uncapped or precision matters more than recall.
-
-    verify_pregate_margin: float | None = None
-    # OPT-IN production knob for the dominant verify stage (BENCH_NOTES
-    # #10): drop candidate pairs whose MinHash-estimated jaccard is below
-    # jaccard_threshold - margin before the shingle-array join. Kept pairs
-    # are still verified with EXACT jaccard; the margin bounds the chance
-    # of gating away a true pair (estimator sigma <= 0.5/sqrt(num_perm),
-    # so 0.14 ~= 3 sigma at 128 perms -> ~0.1% per-pair miss risk, further
-    # recovered by cluster transitivity). Ignored when the overlap channel
-    # is active (overlap pairs can have low jaccard) or keep_all is set.
-    # None (default) = off: oracle queries and parity runs stay exact.
-    verify_pregate_perms: int = 32
-    verify_prefix_gate_k: int | None = None
-    # OPT-IN bottom-k prefix gate for the verify join (r4; VERDICT r3
-    # next#1): because the shingle arrays are sorted by their UNIFORM
-    # 64-bit hash, the first k elements are a bottom-k sketch, and
-    #   est = |prefix_k(A) n prefix_k(B)| / min(k, max(|A|, |B|))
-    # over-estimates the bottom-k-union jaccard estimate (every element the
-    # union sketch counts lies in both prefixes), so gating on
-    # est >= jaccard_threshold - 0.2 keeps a SUPERSET of what the unbiased
-    # sketch would keep. NOTE this is a PROBABILISTIC gate, not a sound
-    # bound: a true pair whose bottom-k estimate lands in the tail below
-    # theta - 0.2 is dropped before exact verification (per-pair miss
-    # <= exp(-2k*0.2^2) ~= 0.6% at k=64 by Hoeffding, ~7e-4 under the
-    # normal approx at theta=0.5; recovered only by cluster transitivity).
-    # Survivors still get exact jaccard. MEASURED at
-    # 200k/17.46M candidates (BENCH_NOTES r4): cuts 73% of candidate pairs
-    # out of the wide-array join with ZERO verified-pair loss (all 9 A/B
-    # runs bit-identical, 499,797 pairs), shrinking verify-join shuffle
-    # bytes ~3.6x -- but single-box wall is BREAK-EVEN (median 84.1s vs
-    # 75.4s) because per-row join machinery, not bytes, dominates there.
-    # Default OFF locally; turn ON (k=64) on real clusters where network
-    # shuffle bytes are the scarce resource. Applies only to the
-    # jaccard-only channel (overlap pairs can have low jaccard).
-    # The pregate probes only the first `verify_pregate_perms` signature
-    # rows (margin rescaled by sqrt(num_perm/n_probe) to keep the same
-    # per-pair miss probability): the gate's join bytes and zip_with work
-    # shrink 4x at 32/128 while the wider margin only admits more pairs
-    # into exact verification (never loses any).
-
     verify_broadcast_max_rows: int = 4_000_000
     verify_broadcast_max_bytes: int = 512 * 1024 * 1024
     # Size-adaptive b-side broadcast for the verify feature join (r6, guide
@@ -204,8 +153,7 @@ class PipelineConfig:
     # shingle UDF emits sorted-distinct hashes), jaccard(A,B) >= theta
     # implies |A n B| >= alpha = theta/(1+theta)*(|A|+|B|), and then the
     # (|A|-alpha+t)-prefixes of A and B must share >= t elements. Pairs
-    # failing that prefix check have jaccard < theta with CERTAINTY, so --
-    # unlike verify_pregate_margin / verify_prefix_gate_k above -- this
+    # failing that prefix check have jaccard < theta with CERTAINTY, so the
     # filter is exact: verified output is byte-identical (checksum-asserted
     # A/B + property test). Cost: an array_intersect over ~((1-theta)/
     # (1+theta))*n + t element prefixes on every pair buys skipping the
@@ -268,22 +216,6 @@ class PipelineConfig:
     # to table_blocks = hamming_max + 1). Requires m | simhash_bits and
     # (bits/m) | 64.
 
-    refine_work_persist: str = "deser"
-    # Storage strategy for the exploded refinement work table (the r3/r4 S5
-    # scaling suspect -- VERDICT r4 next#3): the (mega x levels) posexplode
-    # join output is read by three consumers (salted stats, emit join,
-    # residual join), so without caching Catalyst re-evaluates the upstream
-    # signed-join per consumer.
-    #   "deser" (default): MEMORY_AND_DISK_DESER -- Spark's DataFrame
-    #            default; fastest reads, largest footprint.
-    #   "ser":   MEMORY_AND_DISK -- serialized blocks; smaller cache
-    #            footprint at a CPU decode cost per consumer read.
-    #   "off":   no persist -- each consumer recomputes the (JVM-only,
-    #            codegen) key expressions from the persisted upstream;
-    #            trades recompute for zero cache population cost.
-    # A/B'd at 200k (BENCH_NOTES r5): see the measured table before
-    # changing the default.
-
     extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def __post_init__(self) -> None:
@@ -310,18 +242,6 @@ class PipelineConfig:
                     f"simhash_bits ({bits}) must split into {m} equal blocks "
                     "whose width divides 64"
                 )
-        if self.refine_work_persist not in ("deser", "ser", "off"):
-            raise ValueError(
-                "refine_work_persist must be one of 'deser'/'ser'/'off', "
-                f"got {self.refine_work_persist!r}"
-            )
-        if self.verify_pregate_perms < 1:
-            # <=0 would divide by zero in the pregate margin rescale or slice
-            # an empty signature whose NULL agreement silently drops every
-            # candidate pair (ADVICE r3)
-            raise ValueError(
-                f"verify_pregate_perms must be >= 1, got {self.verify_pregate_perms}"
-            )
 
     @property
     def config_id(self) -> str:
@@ -340,31 +260,20 @@ class PipelineConfig:
 
     @classmethod
     def cluster_profile(cls, executors: int = 1000, **overrides) -> "PipelineConfig":
-        """The measured-on-a-real-cluster operating point: knobs that are
-        deliberately OFF in the single-box default because they were A/B'd
-        to local break-even, but whose wins are network/footprint wins a
-        multi-executor cluster actually collects.
+        """The cluster operating point: COST knobs only, so verified output
+        is bit-identical to the default config on the same input (tested).
+        Everything recall-relevant (refinement levels, chunk target,
+        thresholds) stays at the default, recall-proven values.
 
-        - verify_prefix_gate_k=64: 73% of candidate pairs cut before the
-          wide-array verify join with ZERO verified-pair loss (9/9 A/B runs
-          bit-identical at 200k) and ~3.6x fewer verify-join shuffle bytes
-          (BENCH_NOTES r4 #12). Single-box wall is break-even (row
-          machinery dominates there); on a cluster the scarce resource is
-          the network the gate relieves.
         - shuffle_partitions ~= 4 tasks/core so AQE has packing slack; at
           1000 executors x 4 cores that is 16k partitions, which also keeps
           per-partition shuffle blocks under memory at 100 TB inputs.
-        - everything recall-relevant (refinement levels, chunk target,
-          band agreement) stays at the default, recall-proven values --
-          this profile changes COST knobs only, so verified output is
-          bit-identical to the default config on the same input (tested).
-
         - checkpoint_buckets = shuffle_partitions: the shingle checkpoint
           is written bucketBy(file_id), so the verify stage's two wide
           feature scans skip their Exchange entirely (measured 4 -> 2
           exchanges; output bit-identical, tested). On a cluster this
           removes the pipeline's dominant shuffle payload from the
-          network; single-box it is IO-bound break-even like the gate.
+          network; single-box it is IO-bound break-even.
 
         SimHash extreme scale is corpus-dependent, not cluster-dependent:
         turn on simhash_table_blocks (Manku tables) when the CORPUS grows
@@ -373,7 +282,6 @@ class PipelineConfig:
         parts = max(32, 4 * 4 * executors)
         return cls(
             **{
-                "verify_prefix_gate_k": 64,
                 "shuffle_partitions": parts,
                 "checkpoint_buckets": parts,
                 **overrides,

@@ -45,7 +45,6 @@ FLAGSHIP_CFG = PipelineConfig(
     jaccard_threshold=FLAGSHIP_THETA,
     overlap_threshold=None,  # jaccard-only query: verification is pure JVM
     max_bucket_pairs=1_000_000,  # exact all-pairs (oracle-matched query)
-    min_band_agreement=1,        # oracle query: candidate gen is loss-free
 )
 SUBSET_MOD = 5  # flagship runs on doc_id % 5 == 0 (bounds the dense corpus)
 
@@ -561,7 +560,6 @@ CAPPED_CFG = PipelineConfig(
     overlap_threshold=None,
     max_bucket_pairs=4,      # force the mega path at tiny SF
     mega_chunk_target=4,     # chunked topology exercised, C=4
-    min_band_agreement=1,
 )
 
 
@@ -579,7 +577,6 @@ K3_CFG = PipelineConfig(
     jaccard_threshold=FLAGSHIP_THETA,
     overlap_threshold=None,
     max_bucket_pairs=1_000_000,
-    min_band_agreement=1,
 )
 
 
@@ -709,7 +706,6 @@ def q_overlap_dup_pairs(spark, sf_dir):
         jaccard_threshold=2.0,  # disabled: overlap-only, the reference rule
         overlap_threshold=0.7,
         max_bucket_pairs=1_000_000,  # exact all-pairs (oracle-matched query)
-        min_band_agreement=1,        # oracle query: candidate gen is loss-free
     )
     shingled, signed = _shingled_signed(docs, cfg)
     bands = band_files(signed, cfg)

@@ -98,7 +98,7 @@ def candidate_pairs(
     a second full exchange of the ~O(corpus x bands) stats stream. A/B at
     200k/local[32]: salted 2.3-3.8s vs direct 1.0-2.0s per stats pass,
     identical output, end-to-end S5 37.8s -> 33.0s with all three salted
-    aggregations removed -- scripts/r06_exp_cands2.py).
+    aggregations removed -- OPTIMIZATION_r06.md).
 
     The stats join back onto bands routes the hot key to one reducer but is
     linear and AQE skew-split eligible. The tagged table is persisted
@@ -153,37 +153,14 @@ def candidate_pairs(
     refined_exact, residual = _refine_mega(mega, signed, cfg, levels)
     pairs_mega = _chunked_mega_pairs(residual, cfg)
 
-    # refined pairs are mega-origin: flagged _star so the optional band-
-    # agreement prefilter never drops them (their per-level duplicate
-    # emissions also make n_shared_bands an agreement-EVENT count for them,
-    # not a distinct-band count -- harmless because nothing downstream
-    # filters star-flagged pairs on it). When that prefilter is OFF
-    # (min_band_agreement <= 1, every declared config) the flag is never
-    # read, so the union and the dedup groupBy skip it entirely (r6
-    # resumed session: one less shuffled column + aggregate over the
-    # ~23M-emission dedup exchange).
-    union = pairs_small.unionByName(refined_exact).unionByName(pairs_mega)
-    if cfg.min_band_agreement <= 1:
-        return union.groupBy("id_a", "id_b").agg(
-            F.count("*").alias("n_shared_bands")
-        )
-    merged = (
-        pairs_small.withColumn("_star", F.lit(False))
-        .unionByName(refined_exact.withColumn("_star", F.lit(True)))
-        .unionByName(pairs_mega.withColumn("_star", F.lit(True)))
+    # The final groupBy deduplicates pairs found in several bands (or at
+    # several refinement levels) and counts the emissions per pair.
+    return (
+        pairs_small.unionByName(refined_exact)
+        .unionByName(pairs_mega)
         .groupBy("id_a", "id_b")
-        .agg(
-            F.count("*").alias("n_shared_bands"),
-            F.max("_star").alias("_star"),
-        )
+        .agg(F.count("*").alias("n_shared_bands"))
     )
-    # band-agreement prefilter: single-band candidates are overwhelmingly
-    # false at r>=2 (see config.min_band_agreement); star anchor pairs are
-    # exempt because they are the mega-bucket's only connectivity edges.
-    merged = merged.filter(
-        (F.col("n_shared_bands") >= cfg.min_band_agreement) | F.col("_star")
-    )
-    return merged.drop("_star")
 
 
 def _refine_mega(
@@ -247,16 +224,10 @@ def _refine_mega(
         # even when one source band is a 10^8-member junk bucket.
         .repartition(*KEY)
     )
-    # Storage strategy A/B'd per VERDICT r4 next#3 (see config.
-    # refine_work_persist): cache population of this exploded table was the
-    # suspected S5 scaling residual.
-    if cfg.refine_work_persist == "deser":
-        work = track(work.persist())
-    elif cfg.refine_work_persist == "ser":
-        from pyspark import StorageLevel
-
-        work = track(work.persist(StorageLevel.MEMORY_AND_DISK))
-    # "off": no persist -- consumers recompute the codegen key expressions
+    # persisted: the occupancy stats and the key join below both read this
+    # exploded table; uncached, Catalyst re-evaluates the signed join per
+    # consumer.
+    work = track(work.persist())
     # Occupancy stats: single-level groupBy (r6) -- map-side partial
     # aggregation already bounds any hot key's reducer input at
     # #map-partitions rows; the former explicit salt level cost one extra
@@ -281,8 +252,9 @@ def _refine_mega(
     # the former separate emit/residual joins each re-shuffled the work
     # stream; with the union join + KEY-repartitioned persist the refine
     # wall halved, 11.0-15.6s -> 5.8-10.4s at 200k, outputs identical by
-    # checksum). The predicates are disjoint (sz <= cap emits, sz > cap at
-    # the last level is residual), so one boolean splits the join output.
+    # checksum). The residual predicate excludes emit_f explicitly, so the
+    # two sets are disjoint by construction and one boolean splits the join
+    # output.
     # The all-pairs emission itself is collect_list + HOF expansion riding
     # the join's KEY partitioning (_pair_expand; member lists bounded by
     # `cap`); the joined table is persisted because the emit and residual
@@ -290,7 +262,7 @@ def _refine_mega(
     emit_f = (F.col("sz") >= 2) & (
         (F.col("sz") <= C) | ((F.col("_lvl") >= 1) & (F.col("sz") <= cap))
     )
-    res_f = (F.col("_lvl") == levels - 1) & (F.col("sz") > cap)
+    res_f = (F.col("_lvl") == levels - 1) & (F.col("sz") > cap) & ~emit_f
     keys_tbl = st.filter(emit_f | res_f).select(
         *KEY, "sz", "anchor", emit_f.alias("_emit")
     )

@@ -5,11 +5,14 @@ signature-agreement estimate (MinHash.java:237-251, O17) and the
 reverse-engineered multiset-overlap pairing rule of the out-of-repo verifier
 (SURVEY.md 2.4): sim(A,B) = |A intersect B|_multiset / max(|A|,|B|).
 
-Plan shape: candidates join shingle arrays (sort-merge join, AQE skew-split)
--> jaccard via JVM array functions (whole-stage codegen) -> multiset overlap
-via ONE vectorized pandas UDF (global lexsort over the batch -- no per-row
-set ops) -> optional suffix-style LCS containment channel for containment
-dups the overlap rule misses by construction.
+Plan shape: candidates join shingle arrays (SHUFFLE_HASH with AQE
+skew-split, or both sides broadcast when the feature table is small) ->
+sound pre-score filters (size-ratio bound, PPJoin prefix check) -> exact
+scoring, one scorer per channel: jaccard via JVM `array_intersect`
+(whole-stage codegen) when only jaccard is asked for, else jaccard AND
+multiset overlap from ONE pandas UDF probe per pair (pair_scores_udf) ->
+optional suffix-style LCS containment channel for containment dups the
+overlap rule misses by construction.
 """
 
 from __future__ import annotations
@@ -59,51 +62,6 @@ def _sorted_probe(a, b, ca=None, cb=None) -> tuple[int, int]:
     return inter_d, inter_m
 
 
-@pandas_udf(DoubleType())
-def multiset_overlap_udf(
-    sh_a: pd.Series, cn_a: pd.Series, sh_b: pd.Series, cn_b: pd.Series,
-    nt_a: pd.Series, nt_b: pd.Series,
-) -> pd.Series:
-    """overlap(A,B) = sum_shared min(freq_A, freq_B) / max(|A|, |B|).
-
-    Per-pair sorted binary-search probe (see _sorted_probe)."""
-    n = len(sh_a)
-    inter = np.zeros(n, dtype=np.float64)
-    va, vb = sh_a.to_numpy(), sh_b.to_numpy()
-    wa, wb = cn_a.to_numpy(), cn_b.to_numpy()
-    for i in range(n):
-        a, b = va[i], vb[i]
-        if a is None or b is None:
-            continue
-        _, inter[i] = _sorted_probe(a, b, wa[i], wb[i])
-    denom = np.maximum(nt_a.to_numpy(np.float64), nt_b.to_numpy(np.float64))
-    return pd.Series(np.where(denom > 0, inter / np.maximum(denom, 1.0), 0.0))
-
-
-@pandas_udf(DoubleType())
-def jaccard_sorted_udf(sh_a: pd.Series, sh_b: pd.Series) -> pd.Series:
-    """Exact distinct jaccard over pre-sorted shingle arrays via the
-    binary-search merge probe (VERDICT r3 next#1). NOT the default:
-    measured 2x slower end-to-end than JVM array_intersect at the 200k
-    bench (Arrow transfer of avg-232-token arrays exceeds the hash-build
-    savings); kept as verify_pairs(jaccard_impl="pandas") for corpora with
-    much longer documents, where the probe's O(min log max) wins.
-    Exactness: intersection/union are exact ints, the final division is
-    the same IEEE double op the JVM path performs."""
-    n = len(sh_a)
-    out = np.zeros(n, dtype=np.float64)
-    va, vb = sh_a.to_numpy(), sh_b.to_numpy()
-    for i in range(n):
-        a, b = va[i], vb[i]
-        if a is None or b is None or (len(a) == 0 and len(b) == 0):
-            continue
-        inter_d, _ = _sorted_probe(a, b)
-        union = len(a) + len(b) - inter_d
-        if union > 0:
-            out[i] = inter_d / union
-    return pd.Series(out)
-
-
 #: explicit StructType (a DDL string would be parsed at import time, which
 #: requires an active SparkContext the test collector doesn't have yet)
 _PAIR_SCORES_T = StructType(
@@ -145,43 +103,6 @@ def pair_scores_udf(
             "overlap": np.where(denom > 0, inter_m / np.maximum(denom, 1.0), 0.0),
         }
     )
-
-
-def multiset_overlap_jvm(df, out_col: str = "overlap"):
-    """JVM-only multiset overlap over (sh_a, cn_a, sh_b, cn_b, nt_a, nt_b)
-    columns: builds a per-row count map of side b once, then one
-    zip_with+aggregate pass over side a -- no Python, stays inside
-    whole-stage codegen (NOTES r2 item 4 / VERDICT r2 next#6).
-
-    Asymptotics caveat (why this is NOT the default): Spark's MapData is
-    array-backed and `element_at` on it is a LINEAR scan, so this costs
-    O(|A| * |B|) primitive comparisons per pair versus the pandas UDF's
-    O((|A|+|B|) log) global lexsort per batch. Measured (see
-    BENCH_NOTES.md): the UDF wins on the bench corpus already at ~200-token
-    documents, and the gap grows quadratically with document size -- the
-    Arrow transfer the JVM path avoids is cheaper than the lookup scans it
-    adds. Kept as an option for short-document corpora."""
-    mb = F.map_from_arrays("sh_b", "cn_b")
-    with_map = df.withColumn("_mb", mb)
-    # NB: F.least SKIPS nulls (returns the least non-null argument), so an
-    # absent key must be coalesced to 0 BEFORE the least -- least(c, null)
-    # would silently contribute the full count c. try_element_at (not
-    # element_at): under Spark 4's default ANSI mode a user-supplied session
-    # would raise MAP_KEY_DOES_NOT_EXIST on every absent key; the try_
-    # variant returns NULL in both modes (ADVICE r3).
-    contrib = F.zip_with(
-        "sh_a",
-        "cn_a",
-        lambda s, c: F.least(
-            c, F.coalesce(F.try_element_at(F.col("_mb"), s), F.lit(0))
-        ).cast("long"),
-    )
-    inter = F.aggregate(contrib, F.lit(0).cast("long"), lambda a, x: a + x)
-    denom = F.greatest(F.col("nt_a"), F.col("nt_b")).cast("double")
-    return with_map.withColumn(
-        out_col,
-        F.when(denom > 0, inter.cast("double") / denom).otherwise(F.lit(0.0)),
-    ).drop("_mb")
 
 
 #: max concatenated window keys per LCS-gate lexsort slice (ADVICE r3:
@@ -589,106 +510,6 @@ def join_pair_features(
     )
 
 
-def pregate_candidates(
-    candidates: DataFrame,
-    signed: DataFrame,
-    cfg: PipelineConfig,
-    id_col: str = "file_id",
-) -> DataFrame:
-    """Signature-agreement pregate (cfg.verify_pregate_margin): drop
-    candidate pairs whose MinHash-estimated jaccard is below
-    jaccard_threshold - margin BEFORE the shingle arrays ever move.
-
-    Rationale (BENCH_NOTES #10): the verify join is the pipeline's
-    dominant stage -- per-pair `array_intersect` builds a hash set per
-    row over avg-hundreds-token arrays. The signature columns are a
-    fixed num_perm longs per side and the agreement estimate is pure
-    zip_with/aggregate (whole-stage codegen), so gating here trades a
-    cheap fixed-width join for a large cut of the expensive array join.
-
-    Exactness: the kept pairs still get EXACT jaccard downstream; the
-    margin only bounds which pairs are considered at all. The estimator's
-    std dev for a pair at the threshold is <= 0.5/sqrt(num_perm), so
-    margin = 3 * 0.5/sqrt(128) ~= 0.133 keeps a true-theta pair with
-    p ~= 0.999 per pair. This is a production knob, default OFF -- the
-    oracle queries and the reference-parity runs never enable it, and it
-    must stay off when the overlap channel is on (overlap-qualifying
-    pairs can have arbitrarily low jaccard)."""
-    from lsh_for_source_code_spark.functions.minhash import signature_agreement
-
-    n_probe = min(int(cfg.verify_pregate_perms), cfg.num_perm)
-    sig = signed.select(
-        F.col(id_col).alias("_sid"),
-        F.slice("minhash", 1, n_probe).alias("_mh"),
-    )
-    a = sig.select(F.col("_sid").alias("id_a"), F.col("_mh").alias("_mh_a"))
-    b = sig.select(F.col("_sid").alias("id_b"), F.col("_mh").alias("_mh_b"))
-    est = signature_agreement(F.col("_mh_a"), F.col("_mh_b"))
-    # margin is rescaled to the probe width: sigma <= 0.5/sqrt(n_probe), so
-    # the configured margin (calibrated for num_perm) grows by
-    # sqrt(num_perm / n_probe) to keep the same miss probability.
-    margin = cfg.verify_pregate_margin * (cfg.num_perm / n_probe) ** 0.5
-    return (
-        candidates.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .filter(est >= cfg.jaccard_threshold - margin)
-        .drop("_mh_a", "_mh_b")
-    )
-
-
-def prefix_gate_candidates(
-    candidates: DataFrame,
-    shingled: DataFrame,
-    cfg: PipelineConfig,
-    id_col: str = "file_id",
-) -> DataFrame:
-    """Bottom-k prefix gate (cfg.verify_prefix_gate_k; VERDICT r3 next#1):
-    drop candidate pairs whose prefix-sketch jaccard estimate is below
-    jaccard_threshold - 0.2 BEFORE the full shingle arrays ever move.
-
-    This is a PROBABILISTIC gate with negligible miss probability -- NOT a
-    sound filter like the size-ratio bound: a true pair whose bottom-k
-    estimate falls in the tail below theta - 0.2 is silently dropped before
-    exact verification. Two facts bound the miss rate. (1) Deterministic
-    dominance: the arrays are sorted by uniform hash, so prefix_k is a
-    bottom-k sample and |prefix_k(A) n prefix_k(B)| / min(k, max(|A|,|B|))
-    >= the unbiased bottom-k-union estimate (any element that sketch counts
-    is <= the union's k-th smallest, hence inside BOTH prefixes, and the
-    denominator min(k, max sizes) <= min(k, |union|)). (2) Concentration of
-    that underlying estimate: per-pair miss probability at a true-theta pair
-    is <= exp(-2k * 0.2^2) ~= 0.6% at k=64 (Hoeffding, conservative); under
-    the normal approximation the 0.2 margin is >= 3.2 sigma at theta=0.5
-    (~7e-4) and >= 5.3 sigma at theta=0.9 (~6e-8), and misses are further
-    recovered by cluster transitivity. Operators enabling this on clusters
-    should know it trades that bounded miss risk for shuffle bytes.
-    Measured at 200k (BENCH_NOTES r4): 73% of 17.46M candidates cut with
-    zero verified-pair loss across 9 runs; ~3.6x verify-join shuffle-byte
-    reduction; single-box wall break-even (join row machinery dominates
-    there) -- this is a cluster-network knob, hence opt-in."""
-    k = int(cfg.verify_prefix_gate_k)
-    feat = shingled.select(
-        F.col(id_col).alias("fid"),
-        F.slice("shingles", 1, k).alias("pf"),
-        F.size("shingles").alias("nsh"),
-    )
-    a = feat.select(
-        F.col("fid").alias("id_a"), F.col("pf").alias("pa"), F.col("nsh").alias("na")
-    )
-    b = feat.select(
-        F.col("fid").alias("id_b"), F.col("pf").alias("pb"), F.col("nsh").alias("nb")
-    )
-    x = F.size(F.array_intersect("pa", "pb")).cast("double")
-    d = F.greatest(
-        F.least(F.lit(float(k)), F.greatest("na", "nb").cast("double")), F.lit(1.0)
-    )
-    return (
-        candidates.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .filter(x / d >= F.lit(cfg.jaccard_threshold - 0.2) - F.lit(1e-12))
-        .drop("pa", "pb", "na", "nb")
-    )
-
-
 def sound_prefix_pred(theta: float, t: int):
     """SOUND necessary condition for jaccard(sh_a, sh_b) >= theta
     (cfg.verify_sound_prefix_t; PPJoin t-occurrence lemma, Xiao et al.
@@ -742,45 +563,28 @@ def verify_pairs(
     id_col: str = "file_id",
     keep_all: bool = False,
     compute_overlap: bool = True,
-    overlap_impl: str = "pandas",
-    signed: DataFrame | None = None,
-    jaccard_impl: str = "jvm",
 ) -> DataFrame:
     """(id_a, id_b, jaccard, overlap [, n_shared_bands]) for pairs passing
     jaccard >= jaccard_threshold OR overlap >= overlap_threshold.
 
-    Cost shape (VERDICT r3 next#1, all alternatives MEASURED -- BENCH_NOTES
-    r4): a SOUND size-ratio prefilter runs first inside whole-stage codegen
-        jaccard  <= min(|A|, |B|) / max(|A|, |B|)      (distinct sizes)
-        overlap  <= min(nt_A, nt_B) / max(nt_A, nt_B)  (multiset totals)
-    -- O(1) per row, free, and sharp at high thresholds (theta=0.9
-    flagship). Optional gates before the wide-array join: the bottom-k
-    prefix gate (cfg.verify_prefix_gate_k, see prefix_gate_candidates) and
-    the signature pregate (cfg.verify_pregate_margin). Scoring defaults:
-    jaccard_impl="jvm" (array_intersect; the per-pair sorted binary-search
-    pandas probe lost the 200k A/B ~2x end-to-end -- Arrow transfer of the
-    arrays exceeds the JVM hash-build savings at avg-232-token docs; "pandas"
-    remains for very-long-document corpora) and overlap_impl="pandas" (one
-    probe yields jaccard AND overlap; the JVM map-lookup alternative is
-    O(|A|*|B|)).
+    The overlap channel is on when compute_overlap is set AND either
+    keep_all or cfg.overlap_threshold asks for it. The plan:
 
-    Gates are skipped whenever the overlap channel is active or keep_all is
-    requested (both need pairs whose jaccard estimate may be arbitrarily
-    low).
+    1. join both sides' shingle arrays (join_pair_features: SHUFFLE_HASH,
+       or both sides broadcast when feature_table_fits_broadcast);
+    2. unless keep_all, SOUND filters that never change the output, all
+       inside whole-stage codegen:
+           jaccard  <= min(|A|, |B|) / max(|A|, |B|)      (distinct sizes)
+           overlap  <= min(nt_A, nt_B) / max(nt_A, nt_B)  (multiset totals)
+       and, on the jaccard-only channel, the PPJoin prefix check
+       (sound_prefix_pred, cfg.verify_sound_prefix_t);
+    3. exact scoring, one scorer per channel: jaccard-only uses the JVM
+       `array_intersect` (the per-pair pandas probe lost ~2x end-to-end --
+       Arrow transfer of the arrays costs more than the JVM hash build it
+       saves); with overlap on, ONE pair_scores_udf probe yields jaccard
+       AND overlap;
+    4. the exact threshold filter (skipped under keep_all).
     """
-    if (
-        cfg.verify_prefix_gate_k is not None
-        and not keep_all
-        and cfg.overlap_threshold is None
-    ):
-        candidates = prefix_gate_candidates(candidates, shingled, cfg, id_col)
-    if (
-        cfg.verify_pregate_margin is not None
-        and signed is not None
-        and not keep_all
-        and cfg.overlap_threshold is None
-    ):
-        candidates = pregate_candidates(candidates, signed, cfg, id_col)
     compute_overlap = compute_overlap and (
         keep_all or cfg.overlap_threshold is not None
     )
@@ -800,13 +604,6 @@ def verify_pairs(
     # FP; the exact post-score filter still decides membership.
     eps = F.lit(1e-12)
 
-    def jvm_jaccard(df):
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union = sz_a + sz_b - inter
-        return df.withColumn(
-            "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-        )
-
     if compute_overlap:
         if not keep_all:
             nt_bound = F.least("nt_a", "nt_b").cast("double") / F.greatest(
@@ -816,17 +613,14 @@ def verify_pairs(
                 (jac_bound >= F.lit(cfg.jaccard_threshold) - eps)
                 | (nt_bound >= F.lit(cfg.overlap_threshold) - eps)
             )
-        if overlap_impl == "jvm":
-            out = multiset_overlap_jvm(jvm_jaccard(joined))
-        else:
-            out = joined.withColumn(
-                "_scores",
-                pair_scores_udf("sh_a", "cn_a", "sh_b", "cn_b", "nt_a", "nt_b"),
-            ).select(
-                "*",
-                F.col("_scores.jaccard").alias("jaccard"),
-                F.col("_scores.overlap").alias("overlap"),
-            )
+        out = joined.withColumn(
+            "_scores",
+            pair_scores_udf("sh_a", "cn_a", "sh_b", "cn_b", "nt_a", "nt_b"),
+        ).select(
+            "*",
+            F.col("_scores.jaccard").alias("jaccard"),
+            F.col("_scores.overlap").alias("overlap"),
+        )
         if not keep_all:
             out = out.filter(
                 (F.col("jaccard") >= cfg.jaccard_threshold)
@@ -835,16 +629,16 @@ def verify_pairs(
     else:
         if not keep_all:
             joined = joined.filter(jac_bound >= F.lit(cfg.jaccard_threshold) - eps)
-            t = getattr(cfg, "verify_sound_prefix_t", None)
+            t = cfg.verify_sound_prefix_t
             if t and t > 0 and cfg.jaccard_threshold >= SOUND_PREFIX_MIN_THETA:
                 joined = joined.filter(
                     sound_prefix_pred(cfg.jaccard_threshold, int(t))
                 )
-        if jaccard_impl == "jvm":
-            out = jvm_jaccard(joined)
-        else:
-            out = joined.withColumn("jaccard", jaccard_sorted_udf("sh_a", "sh_b"))
-        out = out.withColumn("overlap", F.lit(None).cast("double"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        union = sz_a + sz_b - inter
+        out = joined.withColumn(
+            "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+        ).withColumn("overlap", F.lit(None).cast("double"))
         if not keep_all:
             out = out.filter(F.col("jaccard") >= cfg.jaccard_threshold)
 

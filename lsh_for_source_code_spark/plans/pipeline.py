@@ -295,10 +295,9 @@ def run_pipeline(
         "candidate_pairs", candidate_pairs(bands, cfg, signed=signed)
     )
 
-    # S6: exact verification (optionally signature-pregated, see
-    # cfg.verify_pregate_margin -- kept pairs are still exact-jaccard).
+    # S6: exact verification.
     verified = store.materialize(
-        "verified_pairs", verify_pairs(cands, shingled, cfg, signed=signed)
+        "verified_pairs", verify_pairs(cands, shingled, cfg)
     )
     if with_containment:
         from lsh_for_source_code_spark.operators.verify import add_lcs_containment

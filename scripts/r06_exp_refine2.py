@@ -2,7 +2,7 @@
 """r06 S5 refine experiment (resumed session): cut the work-stream
 exchanges inside _refine_mega.
 
-Decomposition (scripts/r06_exp_cands4.py) pinned refine at ~18s of the
+Decomposition (OPTIMIZATION_r06.md) pinned refine at ~18s of the
 ~38s S5 stage. The persisted `work` table (mega members x levels) crosses
 THREE exchanges: st stats groupBy, the emit join, the residual join.
 

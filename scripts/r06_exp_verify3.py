@@ -101,7 +101,7 @@ def main():
             V.join_pair_features = ORIG_JPF if v == "prod" else jpf_bcast2
             spark.sparkContext.setJobDescription(f"verify3:{v}")
             t0 = time.monotonic()
-            out = V.verify_pairs(cands, shingled, cfg, signed=signed)
+            out = V.verify_pairs(cands, shingled, cfg)
             row = out.agg(
                 F.count("*").alias("n"),
                 F.sum(F.xxhash64("id_a", "id_b")).alias("chk"),

@@ -33,7 +33,6 @@ from lsh_for_source_code_spark.operators.verify import verify_pairs
 
 CFG = PipelineConfig(
     num_perm=16, bands=8, rows_per_band=2, max_bucket_pairs=4,
-    min_band_agreement=1,  # fixtures build single-band tables
 )
 
 
@@ -220,43 +219,6 @@ def test_candidates_mega_refinement_finds_agreeing_pairs(spark):
     assert {(0, 1), (2, 3)} <= got
     # junk stays bounded: far below the 79,800 quadratic pair count
     assert len(got) < n * cfg.max_bucket_pairs * cfg.mega_refine_levels
-
-
-def test_candidates_refine_persist_strategies_identical(spark):
-    """config.refine_work_persist (VERDICT r4 next#3 A/B knob) is a pure
-    storage-strategy choice: deser / ser / off must produce the identical
-    candidate-pair multiset (same pairs, same n_shared_bands)."""
-    n = 300
-    rng = np.random.default_rng(23)
-    mh = rng.integers(1, 1 << 40, size=(n, CFG.num_perm)).astype("int64")
-    for a, b in ((0, 1), (5, 6)):
-        mh[b] = mh[a]
-    bands = spark.createDataFrame(
-        pd.DataFrame({"file_id": range(n), "band_id": [0] * n, "band_hash": [7] * n})
-    )
-    signed = spark.createDataFrame(
-        pd.DataFrame({"file_id": range(n), "minhash": [list(r) for r in mh]})
-    )
-    results = {}
-    for strat in ("deser", "ser", "off"):
-        cfg = replace(
-            CFG,
-            max_bucket_pairs=4,
-            mega_chunk_target=2,
-            mega_refine_levels=2,
-            refine_work_persist=strat,
-        )
-        results[strat] = sorted(
-            (r.id_a, r.id_b, r.n_shared_bands)
-            for r in candidate_pairs(bands, cfg, signed=signed).collect()
-        )
-    assert results["deser"] == results["ser"] == results["off"]
-    assert {(0, 1), (5, 6)} <= {(a, b) for a, b, _ in results["deser"]}
-
-
-def test_refine_persist_knob_validated():
-    with pytest.raises(ValueError):
-        replace(CFG, refine_work_persist="bogus")
 
 
 def test_refine_union_join_equals_two_join_reference(spark):
@@ -545,63 +507,12 @@ def test_simhash_small_blocks_unchanged_by_cap(spark):
     assert {p[:2] for p in got_u} == {(0, 1)}
 
 
-def test_candidates_band_agreement_prefilter(spark):
-    """min_band_agreement=2 drops single-band candidates but keeps
-    multi-band pairs and star-topology anchor edges."""
-    cfg1 = PipelineConfig(
-        num_perm=16, bands=8, rows_per_band=2, max_bucket_pairs=4,
-        min_band_agreement=1, mega_chunk_target=1,
-    )
-    cfg2 = PipelineConfig(
-        num_perm=16, bands=8, rows_per_band=2, max_bucket_pairs=4,
-        min_band_agreement=2, mega_chunk_target=1,
-    )
-    bands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                # pair (1,2): shares bands 0 and 1 -> survives
-                # pair (1,3): shares band 0 only -> dropped at agreement>=2
-                # ids 10..19 in one band-0 mega bucket (> cap) -> star edges kept
-                "file_id": [1, 2, 3, 1, 2] + list(range(10, 20)),
-                "band_id": [0, 0, 0, 1, 1] + [0] * 10,
-                "band_hash": [7, 7, 7, 9, 9] + [55] * 10,
-            }
-        )
-    )
-    got1 = {(r.id_a, r.id_b) for r in candidate_pairs(bands, cfg1).collect()}
-    got2 = {(r.id_a, r.id_b) for r in candidate_pairs(bands, cfg2).collect()}
-    star = {(10, j) for j in range(11, 20)}
-    assert got1 == {(1, 2), (1, 3), (2, 3)} | star
-    assert got2 == {(1, 2)} | star
-
-    # default chunked topology: mega-bucket edges are equally exempt from
-    # the agreement filter -- the whole bucket stays connected at agreement=2
-    cfg3 = PipelineConfig(
-        num_perm=16, bands=8, rows_per_band=2, max_bucket_pairs=4,
-        min_band_agreement=2, mega_chunk_target=8,
-    )
-    got3 = candidate_pairs(bands, cfg3).collect()
-    assert {(r.id_a, r.id_b) for r in got3} >= {(1, 2)}
-    mega_ids = set(range(10, 20))
-    parent = {i: i for i in mega_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in got3:
-        if r.id_a in mega_ids and r.id_b in mega_ids:
-            parent[find(r.id_a)] = find(r.id_b)
-    assert len({find(i) for i in mega_ids}) == 1
-
-
 def test_verify_jaccard_probe_matches_jvm_intersect(spark):
-    """The per-pair sorted binary-search probe (jaccard_impl='pandas', the
-    r4 default) must agree EXACTLY with the JVM array_intersect expression
-    on every pair -- including docs whose shingle hashes straddle the
-    int64 sign boundary (the probe must compare in uint64 order)."""
+    """The overlap channel's per-pair sorted binary-search probe
+    (pair_scores_udf) must yield a jaccard that agrees EXACTLY with the
+    jaccard-only channel's JVM array_intersect expression on every pair --
+    including docs whose shingle hashes straddle the int64 sign boundary
+    (the probe must compare in uint64 order)."""
     rng = np.random.default_rng(29)
     vocab = [f"tok{i}" for i in range(60)]
     contents = [
@@ -628,140 +539,23 @@ def test_verify_jaccard_probe_matches_jvm_intersect(spark):
         F.sum(F.size(F.filter("shingles", lambda x: x >= 0))).alias("pos"),
     ).first()
     assert signs.neg > 0 and signs.pos > 0
-    kwargs = dict(keep_all=True, compute_overlap=False)
-    pd_rows = (
-        verify_pairs(cands, shingled, CFG, jaccard_impl="pandas", **kwargs)
+    probe_rows = (
+        verify_pairs(cands, shingled, CFG, keep_all=True)
         .select("id_a", "id_b", "jaccard")
         .toPandas()
         .sort_values(["id_a", "id_b"])
         .reset_index(drop=True)
     )
     jvm_rows = (
-        verify_pairs(cands, shingled, CFG, jaccard_impl="jvm", **kwargs)
+        verify_pairs(cands, shingled, CFG, keep_all=True, compute_overlap=False)
         .select("id_a", "id_b", "jaccard")
         .toPandas()
         .sort_values(["id_a", "id_b"])
         .reset_index(drop=True)
     )
-    assert len(pd_rows) == len(jvm_rows) > 0
-    assert (pd_rows.jaccard == jvm_rows.jaccard).all()  # bit-exact
-    assert (pd_rows.jaccard > 0).any()
-
-
-def test_verify_prefix_gate_output_invariant(spark):
-    """cfg.verify_prefix_gate_k (r4): gated verification must emit exactly
-    the ungated pair set -- the bottom-k prefix estimate over-estimates the
-    unbiased sketch, so at gate = theta - 0.2 no true pair is lost (also
-    measured at 200k scale: 9/9 runs bit-identical, BENCH_NOTES r4).
-    Corpus includes borderline pairs near theta and short docs (shorter
-    than k, where the gate must use the max-size denominator, not k)."""
-    rng = np.random.default_rng(37)
-    vocab = [f"w{i}" for i in range(300)]
-    contents = []
-    for i in range(60):
-        base = list(rng.choice(vocab, size=rng.integers(4, 120)))
-        contents.append(" ".join(base))
-        keep = max(1, int(len(base) * rng.uniform(0.4, 0.95)))
-        mutated = base[:keep] + list(rng.choice(vocab, size=len(base) - keep))
-        contents.append(" ".join(mutated))
-    docs = spark.createDataFrame(
-        pd.DataFrame({"file_id": range(len(contents)), "content": contents})
-    )
-    cfg = replace(
-        PipelineConfig(), max_bucket_pairs=1_000_000, jaccard_threshold=0.5
-    )
-    shingled = shingle_files(docs)
-    signed = sign_files(shingled, cfg)
-    cands = candidate_pairs(band_files(signed, cfg), cfg, signed=signed)
-    base_pairs = {
-        (r.id_a, r.id_b)
-        for r in verify_pairs(cands, shingled, cfg, compute_overlap=False).collect()
-    }
-    gated_cfg = replace(cfg, verify_prefix_gate_k=64)
-    gated_pairs = {
-        (r.id_a, r.id_b)
-        for r in verify_pairs(
-            cands, shingled, gated_cfg, compute_overlap=False
-        ).collect()
-    }
-    assert len(base_pairs) > 10
-    assert gated_pairs == base_pairs
-
-
-def test_verify_overlap_jvm_matches_pandas(spark):
-    """The JVM map-lookup overlap expression (multiset_overlap_jvm) and the
-    batched-lexsort pandas UDF must agree exactly (VERDICT r2 next#6)."""
-    rng = np.random.default_rng(17)
-    vocab = [f"tok{i}" for i in range(40)]
-    contents = [
-        " ".join(rng.choice(vocab, size=rng.integers(0, 60)))
-        for _ in range(30)
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame({"file_id": range(30), "content": contents})
-    )
-    shingled = shingle_files(docs)
-    cands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "id_a": [i for i in range(29) for _ in range(2)],
-                "id_b": [j for i in range(29) for j in (i + 1, (i + 7) % 30)],
-            }
-        ).query("id_a < id_b")
-    )
-    cfg = replace(CFG, overlap_threshold=0.0)
-    pd_rows = (
-        verify_pairs(cands, shingled, cfg, keep_all=True)
-        .select("id_a", "id_b", "overlap")
-        .toPandas()
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    jvm_rows = (
-        verify_pairs(cands, shingled, cfg, keep_all=True, overlap_impl="jvm")
-        .select("id_a", "id_b", "overlap")
-        .toPandas()
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    assert len(pd_rows) == len(jvm_rows) > 0
-    assert np.allclose(pd_rows.overlap, jvm_rows.overlap, atol=1e-12)
-
-
-def test_verify_pregate_keeps_true_pairs_and_cuts_candidates(spark):
-    """cfg.verify_pregate_margin (BENCH_NOTES #10): with a 3-sigma margin
-    the gated verify output must equal the ungated output on a corpus of
-    near-dup pairs (every kept pair is still exact-verified), while the
-    gate itself must actually drop candidate pairs."""
-    from lsh_for_source_code_spark.corpus import corpus_df
-    from lsh_for_source_code_spark.operators.verify import pregate_candidates
-    from lsh_for_source_code_spark.plans.pipeline import with_file_id
-
-    df, _ = corpus_df(spark, n_files=200, seed=41)
-    ids = with_file_id(df)
-    cfg = PipelineConfig()
-    gated_cfg = replace(cfg, verify_pregate_margin=0.14)
-    shingled = shingle_files(ids).select(
-        "file_id", "content_sha", "n_tokens", "shingles", "counts"
-    ).persist()
-    signed = sign_files(shingled, cfg).persist()
-    cands = candidate_pairs(band_files(signed, cfg), cfg, signed=signed).persist()
-
-    exact = {
-        (r.id_a, r.id_b)
-        for r in verify_pairs(cands, shingled, cfg).collect()
-    }
-    gated = {
-        (r.id_a, r.id_b)
-        for r in verify_pairs(
-            cands, shingled, gated_cfg, signed=signed
-        ).collect()
-    }
-    assert gated == exact  # 3-sigma margin: no true pair lost here
-    n_all = cands.count()
-    n_gated = pregate_candidates(cands, signed, gated_cfg).count()
-    assert 0 < n_gated < n_all  # the gate genuinely cuts the join input
-    shingled.unpersist(); signed.unpersist(); cands.unpersist()
+    assert len(probe_rows) == len(jvm_rows) > 0
+    assert (probe_rows.jaccard == jvm_rows.jaccard).all()  # bit-exact
+    assert (probe_rows.jaccard > 0).any()
 
 
 def test_simhash_manku_tables_beat_narrow_blocks_at_scale(spark):

@@ -200,7 +200,6 @@ def full_corpus_scored(spark):
         jaccard_threshold=2.0,  # disabled: the reference rule is overlap-only
         overlap_threshold=0.5,
         max_bucket_pairs=1_000_000,
-        min_band_agreement=1,  # parity run: loss-free candidate generation
     )
     shingled = (
         shingle_files(df)

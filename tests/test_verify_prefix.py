@@ -146,7 +146,7 @@ def small_corpus_shingled(spark):
     from lsh_for_source_code_spark.operators.candidates import candidate_pairs
     from lsh_for_source_code_spark.plans.pipeline import with_file_id
 
-    cfg = PipelineConfig(max_bucket_pairs=1_000_000, min_band_agreement=1)
+    cfg = PipelineConfig(max_bucket_pairs=1_000_000)
     files = spark.createDataFrame(generate_corpus(600, 23).files).repartition(4)
     ids = with_file_id(files, check_collisions=False)
     shingled = shingle_files(ids, k=cfg.shingle_k, min_freq=cfg.min_token_freq)[
