@@ -469,8 +469,7 @@ the stage's irreducible profile -- the only stage that both populates
 a multi-GB cache and runs two salted shuffle rounds over the exploded
 table, i.e. memory-bus-bound work a single box cannot parallelize
 (same host-saturation signature as the raw-numpy envelope above).
-The deserialized persist stays (best absolute wall); the storage-
-strategy knob was later removed because no config or workload set it.
+The deserialized persist stays (best absolute wall).
 
 ## Corpus-size scaling (data axis, r5)
 
