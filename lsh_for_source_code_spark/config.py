@@ -159,11 +159,12 @@ class PipelineConfig:
     # (1+theta))*n + t element prefixes on every pair buys skipping the
     # full-array intersect (and all downstream row machinery) on rejected
     # pairs. Measured at 200k/local[32], t=16, identical outputs
-    # (scripts/r06_exp_prefix.py): theta=0.9 flagship query 5.6s -> 4.2s
+    # (OPTIMIZATION_r06.md "S6 verify: SOUND positional prefix filter"):
+    # theta=0.9 flagship query 5.6s -> 4.2s
     # (prefix ~0.053n+t rejects everything below j~0.68); theta=0.5
     # pipeline verify warm 24.7-28.0s -> 15.2-22.5s -- the junk
     # distribution (72% of the 17.2M candidates at j in [0.10,0.30),
-    # `r06_exp_prefix.py dist`) sits far enough below the n/3+t
+    # same section) sits far enough below the n/3+t
     # certificate, and rejected pairs skip the full hash-set build, so the
     # filter beats the naive (p/n)-cost model even at theta=0.5. The
     # operator applies it for jaccard_threshold >= 0.5 (below that the
@@ -287,18 +288,3 @@ class PipelineConfig:
                 **overrides,
             }
         )
-
-
-#: Config reproducing the reference golden run's shape: stages=10, buckets=10,
-#: sparsity=5, sig size 50 (output dir name + ReadMe.txt:51). Used by parity
-#: tests; `buckets` lives in extra because only the parity band hash uses it.
-def reference_parity_config(seed: int = 42) -> PipelineConfig:
-    return PipelineConfig(
-        shingle_k=1,
-        min_token_freq=5,
-        num_perm=50,
-        bands=10,
-        rows_per_band=5,
-        seed=seed,
-        extra={"buckets": 10},
-    )

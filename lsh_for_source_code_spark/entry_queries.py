@@ -427,7 +427,8 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     # zip_with + distinct expression independently on both join sides
     # (plus once more in a pushed size-filter); same broken-reuse shape
     # the bloom/lm/semdedup persists fixed. Measured same-process
-    # interleaved (scripts/r06_exp_ngram.py): 3.4-5.0s -> 2.4-2.7s,
+    # interleaved (OPTIMIZATION_r06.md "ngram_jaccard_pairs: persist the
+    # pre-explode grams table"): 3.4-5.0s -> 2.4-2.7s,
     # winning every rep, identical output by checksum.
     gtab = track(
         docs.select("doc_id", "source", grams.alias("grams"))
@@ -592,7 +593,7 @@ def q_near_dup_pairs_k3(spark, sf_dir):
 
 def q_near_dup_clusters_capped(spark, sf_dir):
     """Connected components over verified pairs with the SKEW CAP ACTIVE
-    (mega-bucket chunked topology + anchor edges + salted stats). Same
+    (mega-bucket chunked topology + anchor edges + occupancy stats). Same
     brute-force recursive-CTE oracle as near_dup_clusters: a value match
     proves the capped candidate graph loses no cluster-level recall."""
     docs = _read(spark, sf_dir, "documents").filter(
@@ -1818,8 +1819,8 @@ def q_duplicate_spans(spark, sf_dir):
     two map-side-combinable aggregations plus one equi-join on an 8-byte
     xxhash64 key instead of a monolithic sort: (doc, win_hash) partial
     counts absorb within-doc repeats before the cross-doc count, so the
-    per-window aggregate is two-level (the same salting discipline as the
-    candidate stage); the join back is a shuffle hash join on uniformly
+    per-window aggregate is two-level (map-side partial counts, like the
+    candidate stage's occupancy stats); the join back is a shuffle hash join on uniformly
     distributed hashes with AQE skew-split for mega-windows (a licence
     header shared by millions of files). Stride > 1 is the linear cost
     knob at petabyte scale (detection guaranteed for spans >= W + stride

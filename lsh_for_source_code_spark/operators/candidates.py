@@ -48,8 +48,9 @@ def _pair_expand(groups: DataFrame, members_col: str = "ms") -> DataFrame:
     feeding aggregation groups by a superset of the upstream join/exchange
     key, the groupBy rides the existing hash partitioning -- no new
     Exchange, no second hash-table build+probe over the full row stream.
-    Measured at 200k/local[32] (scripts/r06_exp_cands3.py, identical
-    output by checksum): S5 24.4-45.3s -> 19.4-21.3s."""
+    Measured at 200k/local[32] (OPTIMIZATION_r06.md "S5 candidates: HOF
+    pair expansion", identical output by checksum): S5 24.4-45.3s ->
+    19.4-21.3s."""
     pairs = F.flatten(
         F.transform(
             members_col,
@@ -248,7 +249,7 @@ def _refine_mega(
     # Rather than tagging EVERY work row with its bucket stats (a full-width
     # join of the exploded table, the r3 S5 scaling floor), work joins only
     # the interesting keys -- and emit + residual keys ride ONE union key
-    # table through ONE join (r6 resumed session, scripts/r06_exp_refine2.py:
+    # table through ONE join (OPTIMIZATION_r06.md "S5 refine: union key table":
     # the former separate emit/residual joins each re-shuffled the work
     # stream; with the union join + KEY-repartitioned persist the refine
     # wall halved, 11.0-15.6s -> 5.8-10.4s at 200k, outputs identical by
@@ -327,9 +328,9 @@ def simhash_candidate_pairs(
     so this is again a groupBy-on-block-key self-join, never a cross join.
 
     Skew defense (VERDICT r1 wrong#2): identical to candidate_pairs --
-    block occupancy + anchor come from a SALTED two-level aggregation, blocks
-    with <= cfg.simhash_max_block members emit exact all-pairs, mega blocks
-    use the same random chunked topology as the MinHash path (r2 ADVICE:
+    block occupancy + anchor come from one map-side-combined aggregation,
+    blocks with <= cfg.simhash_max_block members emit exact all-pairs, mega
+    blocks use the same random chunked topology as the MinHash path (r2 ADVICE:
     the pure min-id star lost every mega-block pair whose members were
     mutually within t but > t from the anchor; with ~C-sized chunks each
     member gets C-1 direct hamming comparisons plus a chunk-min -> anchor

@@ -58,10 +58,11 @@ def connected_components(
     Scale-adaptive: below `driver_max_edges` the component computation runs
     as driver-side union-find (one bounded collect of two long columns --
     2M edges ~ a few hundred MB of Row objects, sized for a driver heap
-    shared with local-mode executors); above it, distributed min-label
-    propagation (one shuffle per iteration, O(diameter) iterations). Both
-    produce cluster_id = min file_id in component, and the node table
-    itself is never collected.
+    shared with local-mode executors); above it, distributed alternating
+    large-star / small-star contraction (`_large_small_star`: O(log^2 n)
+    rounds worst case, independent of diameter; raises RuntimeError if
+    `max_iter` rounds pass without a fixpoint). Both produce cluster_id =
+    min file_id in component, and the node table itself is never collected.
     """
     e = edges.select(
         F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
@@ -139,7 +140,9 @@ def _large_small_star(e: DataFrame, max_iter: int = 25) -> DataFrame:
     an edge set that shrinks monotonically; localCheckpoint cuts lineage.
 
     Convergence check: at the fixpoint a full round leaves the (count,
-    hash-sum) edge checksum unchanged -- one tiny aggregate per round.
+    hash-sum) edge checksum unchanged -- one tiny aggregate per round. No
+    fixpoint within `max_iter` rounds raises RuntimeError rather than
+    returning unconverged labels.
     """
     edges = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
     # every node ever seen (roots drop out of the star edge set; singleton
@@ -191,6 +194,11 @@ def _large_small_star(e: DataFrame, max_iter: int = 25) -> DataFrame:
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected components: no fixpoint after max_iter={max_iter} "
+            f"large/small-star rounds ({prev[0]} edges remain); raise max_iter"
+        )
     # fixpoint: edges are (member, root) stars; roots label themselves
     return (
         seen.join(

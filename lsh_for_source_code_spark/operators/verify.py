@@ -479,14 +479,15 @@ def join_pair_features(
     join would re-shuffle by id_b (~|pairs| x avg-array bytes, 17.4M x
     ~1.9 KB ~= 32 GB at the 200k bench). Broadcasting the b-side makes
     join 2 a map-side lookup, so the wide intermediate never crosses an
-    exchange (measured at 200k/local[32], scripts/r06_exp_verify.py,
-    identical 499,797-pair output by checksum: warm ~25s -> ~22s, cold
-    87s -> 20s; pipeline S6 stage 37.3s -> ~22s). The a-side then
-    broadcasts TOO (r6 resumed session, scripts/r06_exp_verify3.py): the
-    two broadcast subtrees are canonically identical, so AQE's stage
-    cache builds the relation once and the candidates stream never
-    shuffles at all -- verify wall 17.2-24.9s -> 14.4-20.0s, winning 6/7
-    interleaved reps, output identical by count + xxhash64 checksum."""
+    exchange (measured at 200k/local[32], OPTIMIZATION_r06.md "S6 verify:
+    size-gated b-side broadcast", identical 499,797-pair output by
+    checksum: warm ~25s -> ~22s, cold 87s -> 20s; pipeline S6 stage 37.3s
+    -> ~22s). The a-side then broadcasts TOO (OPTIMIZATION_r06.md "S6
+    verify: a-side broadcast reuse"): the two broadcast subtrees are
+    canonically identical, so AQE's stage cache builds the relation once
+    and the candidates stream never shuffles at all -- verify wall
+    17.2-24.9s -> 14.4-20.0s, winning 6/7 interleaved reps, output
+    identical by count + xxhash64 checksum."""
     cols = [F.col(id_col).alias("fid"), F.col("shingles")]
     if with_counts:
         cols += [F.col("counts"), F.col("n_tokens")]
@@ -547,10 +548,11 @@ def sound_prefix_pred(theta: float, t: int):
 
 #: sound_prefix_pred pays while the prefix ((1-theta)/(1+theta))*n + t is a
 #: modest fraction of the array. Measured at the 200k bench corpus
-#: (scripts/r06_exp_prefix.py ab, identical 499,797-pair output in every
-#: rep): theta=0.5, t=16 -- warm 24.7-28.0s -> 15.2-22.5s (the rejected 72%
-#: of pairs skip the full hash-set build AND all downstream row machinery,
-#: beating the naive (p/n)-cost model); theta=0.9 (flagship query, t=16) --
+#: (OPTIMIZATION_r06.md "S6 verify: SOUND positional prefix filter",
+#: identical 499,797-pair output in every rep): theta=0.5, t=16 -- warm
+#: 24.7-28.0s -> 15.2-22.5s (the rejected 72% of pairs skip the full
+#: hash-set build AND all downstream row machinery, beating the naive
+#: (p/n)-cost model); theta=0.9 (flagship query, t=16) --
 #: 5.6s -> 4.2s. Below theta=0.5 the sound prefix exceeds half the array
 #: and no declared query goes there, so the filter stays off.
 SOUND_PREFIX_MIN_THETA = 0.5

@@ -38,19 +38,12 @@ class CheckpointStore:
     records an event in the run's `RunMetrics` ledger (north_rule:
     per-partition lineage + metrics)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str | None,
-        metrics=None,
-        lineage: bool = True,
-    ):
+    def __init__(self, spark: SparkSession, root: str | None, metrics=None):
         from lsh_for_source_code_spark.plans.metrics import RunMetrics
 
         self.spark = spark
         self.root = root
         self.metrics = metrics or RunMetrics()
-        self.lineage = lineage and bool(root)
         self.log: list[dict] = []
 
     def _path(self, name: str) -> str:
@@ -153,20 +146,17 @@ class CheckpointStore:
             else:
                 df.write.mode("overwrite").parquet(self._path(name))
                 out = self.spark.read.parquet(self._path(name))
-            if self.lineage:
-                from lsh_for_source_code_spark.plans.metrics import partition_stats
+            from lsh_for_source_code_spark.plans.metrics import partition_stats
 
-                pstats = partition_stats(out)
-                pstats.write.mode("overwrite").parquet(self._path(name + "__partitions"))
-                rows = int(
-                    self.spark.read.parquet(self._path(name + "__partitions"))
-                    .groupBy()
-                    .sum("rows")
-                    .first()[0]
-                    or 0
-                )
-            else:
-                rows = None
+            pstats = partition_stats(out)
+            pstats.write.mode("overwrite").parquet(self._path(name + "__partitions"))
+            rows = int(
+                self.spark.read.parquet(self._path(name + "__partitions"))
+                .groupBy()
+                .sum("rows")
+                .first()[0]
+                or 0
+            )
             wall = time.monotonic() - t0
             self.log.append({"stage": name, "action": "computed", "wall_s": wall})
             self.metrics.record(name, "computed", rows=rows, wall_s=round(wall, 3))

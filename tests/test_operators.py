@@ -402,6 +402,18 @@ def test_connected_components_long_chain_distributed(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_unconverged_raises(spark):
+    """A distributed run that exhausts max_iter before the edge set reaches
+    its fixpoint must fail loudly, not return unconverged labels: one round
+    cannot contract a 300-node chain."""
+    n = 300
+    edges = spark.createDataFrame(
+        pd.DataFrame({"id_a": list(range(n - 1)), "id_b": list(range(1, n))})
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, driver_max_edges=0, max_iter=1)
+
+
 def test_connected_components_random_graph_both_paths(spark):
     """Cross-validate driver union-find vs distributed star contraction on a
     random graph with mixed component shapes (cliques, chains, singletons)."""
