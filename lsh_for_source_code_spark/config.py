@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import json
 import math
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 # Prime modulus for the affine MinHash family h(x) = (a*x + b) mod P.
 # Mersenne prime 2^61 - 1: with 32-bit shingle values and a < 2^31 the
@@ -194,12 +194,11 @@ class PipelineConfig:
     # pruning: content never moves), so the cost is a small fraction of any
     # pipeline run; raises RuntimeError on collision (the fix is a 128-bit
     # id via with_file_id(id_expr=...)). Default ON (VERDICT r2 next#8).
-    shuffle_partitions: int = 32
     simhash_bits: int = 64
     simhash_hamming_max: int = 3
     simhash_max_block: int = 1024
-    # blocks (16-bit fingerprint slices) with more members than this emit
-    # star-topology pairs against the min-id anchor instead of all pairs --
+    # block-table keys with more members than this emit chunked/star
+    # pairs against the min-id anchor instead of all pairs --
     # the same mega-bucket defense as max_bucket_pairs on the MinHash path
     # (a boilerplate-heavy block value would otherwise go O(k^2)).
     simhash_table_blocks: int | None = None
@@ -210,14 +209,12 @@ class PipelineConfig:
     # least one combination agrees on every block. Key entropy becomes
     # (m - t) * (bits / m) instead of bits / (t + 1): at 10^12 docs the
     # default 4x16-bit decomposition puts ~15M UNRELATED docs in every
-    # block bucket (recall rides the mega-chunk lottery); e.g. bits=128,
-    # m=8 gives 80-bit keys (C(8,3)=56 tables) and bits=64, m=8 gives
-    # 40-bit keys. Cost is the table count C(m, t) rows per doc vs t+1.
+    # block bucket (recall rides the mega-chunk lottery); e.g. m=8 gives
+    # 40-bit keys (C(8,3)=56 tables). Cost is the table count C(m, t) rows
+    # per doc vs t+1.
     # None (default) = the t+1-block single-block-key design (equivalent
     # to table_blocks = hamming_max + 1). Requires m | simhash_bits and
     # (bits/m) | 64.
-
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
@@ -227,6 +224,11 @@ class PipelineConfig:
         if self.checkpoint_buckets is not None and self.checkpoint_buckets < 1:
             raise ValueError(
                 f"checkpoint_buckets must be >= 1, got {self.checkpoint_buckets}"
+            )
+        if not 1 <= self.simhash_bits <= 64:
+            # the fingerprint is one 64-bit long (functions/hashing.simhash_concat)
+            raise ValueError(
+                f"simhash_bits must be in [1, 64], got {self.simhash_bits}"
             )
         if self.simhash_table_blocks is not None:
             m, t, bits = (
@@ -252,9 +254,7 @@ class PipelineConfig:
         )
 
     def to_json(self) -> str:
-        d = asdict(self)
-        d.pop("extra", None)
-        return json.dumps(d, sort_keys=True)
+        return json.dumps(asdict(self), sort_keys=True)
 
     def candidate_recall_at(self, s: float) -> float:
         return candidate_probability(s, self.bands, self.rows_per_band)
@@ -266,11 +266,9 @@ class PipelineConfig:
         Everything recall-relevant (refinement levels, chunk target,
         thresholds) stays at the default, recall-proven values.
 
-        - shuffle_partitions ~= 4 tasks/core so AQE has packing slack; at
-          1000 executors x 4 cores that is 16k partitions, which also keeps
-          per-partition shuffle blocks under memory at 100 TB inputs.
-        - checkpoint_buckets = shuffle_partitions: the shingle checkpoint
-          is written bucketBy(file_id), so the verify stage's two wide
+        - checkpoint_buckets ~= 4 per core (1000 executors x 4 cores ->
+          16k buckets): the shingle checkpoint is written
+          bucketBy(file_id), so the verify stage's two wide
           feature scans skip their Exchange entirely (measured 4 -> 2
           exchanges; output bit-identical, tested). On a cluster this
           removes the pipeline's dominant shuffle payload from the
@@ -280,11 +278,6 @@ class PipelineConfig:
         turn on simhash_table_blocks (Manku tables) when the CORPUS grows
         past ~10^9 docs, regardless of executor count.
         """
-        parts = max(32, 4 * 4 * executors)
         return cls(
-            **{
-                "shuffle_partitions": parts,
-                "checkpoint_buckets": parts,
-                **overrides,
-            }
+            **{"checkpoint_buckets": max(32, 4 * 4 * executors), **overrides}
         )

@@ -72,7 +72,9 @@ def _shingled_signed(docs: DataFrame, cfg: PipelineConfig):
     are registered with caching.track so long-lived sessions can release
     them after materializing (ADVICE r1: persist leak)."""
     shingled = track(
-        shingle_files(_docs_as_files(docs), k=cfg.shingle_k)
+        shingle_files(
+            _docs_as_files(docs), k=cfg.shingle_k, min_freq=cfg.min_token_freq
+        )
         .select("file_id", "n_tokens", "shingles", "counts")
         .persist()
     )
@@ -852,13 +854,13 @@ def q_simhash_hamming_pairs(spark, sf_dir):
 
 def q_simhash_hamming_pairs_tables(spark, sf_dir):
     """Rows-only: the SAME SimHash hamming <= 3 channel as
-    q_simhash_hamming_pairs, but routed through the Manku (WWW'07) C(m,t)
-    block-combination TABLE path (cfg.simhash_table_blocks=8, the
-    extreme-scale key design: combination keys keep per-key entropy high
-    enough that a 10^12-file corpus doesn't degenerate into chunk-lottery
-    mega buckets). Both paths are exact at hamming <= t, so this query's
-    pair set must equal the legacy 4x16-bit path's -- asserted in pytest
-    (test_entry_oracle.py::test_simhash_table_path_equals_legacy_path)."""
+    q_simhash_hamming_pairs, but keyed on the Manku (WWW'07) C(8,3) = 56
+    five-block combination tables (cfg.simhash_table_blocks=8: 40-bit keys
+    keep per-key entropy high enough that a 10^12-file corpus doesn't
+    degenerate into chunk-lottery mega buckets) instead of the 4x16-bit
+    single-block tables. Both key designs are exact at hamming <= t, so
+    this query's pair set must equal q_simhash_hamming_pairs' -- asserted
+    in pytest (test_entry_oracle.py::test_simhash_table_path_equals_legacy_path)."""
     docs = _read(spark, sf_dir, "documents")
     cfg = PipelineConfig(simhash_table_blocks=8)
     _, signed = _shingled_signed(docs, cfg)

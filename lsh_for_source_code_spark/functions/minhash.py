@@ -94,43 +94,3 @@ def signature_agreement(col_a, col_b):
         lambda acc, v: acc + v,
     )
     return agree.cast("double") / F.size(col_a).cast("double")
-
-
-def simhash_fingerprints(df, cfg: PipelineConfig, shingle_col: str = "shingles"):
-    """Wide SimHash fingerprints as array<long> words (VERDICT r3 next#5,
-    Manku et al. WWW'07): cfg.simhash_bits may exceed 64 -- word 0 votes on
-    the raw shingle-hash bits (bit-compatible with the legacy 64-bit
-    `simhash` column), word w >= 1 on splitmix64-remixed hashes (each word
-    gets 64 fresh iid bits per shingle; remix constant = w, the same
-    public-domain finalizer used for k-gram combining).
-
-    At 10^12 docs a 64-bit fingerprint split into 16-bit blocks puts ~15M
-    UNRELATED docs in every block bucket; wider fingerprints + longer
-    block-combination keys (see simhash_candidate_pairs_tables) keep key
-    entropy >> log2(n). This function is the width half of that lever."""
-    from lsh_for_source_code_spark.functions.hashing import (
-        simhash_concat as _simconcat,
-        splitmix64,
-    )
-
-    bits = int(cfg.simhash_bits)
-    n_words = (bits + 63) // 64
-
-    @pandas_udf(ArrayType(LongType()))
-    def fingerprint(shingles: pd.Series, counts: pd.Series) -> pd.Series:
-        concat, offsets = _concat_arrays(shingles, np.int64)
-        cnts, _ = _concat_arrays(counts, np.int64)
-        sh = concat.view(np.uint64)
-        n = len(shingles)
-        words = np.zeros((n, n_words), dtype=np.int64)
-        for w in range(n_words):
-            src = sh if w == 0 else splitmix64(sh + np.uint64(w))
-            word_bits = min(64, bits - 64 * w)
-            words[:, w] = _simconcat(src, cnts, offsets, word_bits)
-        return pd.Series(list(words))
-
-    return df.select(
-        "file_id",
-        fingerprint(F.col(shingle_col), F.col("counts")).alias("fp"),
-        (F.size(shingle_col) == 0).alias("degenerate"),
-    )

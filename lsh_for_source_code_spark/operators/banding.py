@@ -1,22 +1,17 @@
 """Banding stage S4: signature -> (file_id, band_id, band_hash) rows.
 
 Reference counterpart: LSH.hashSignature (LSH.java:47-64) -- splits the
-signature into `stages` bands and hashes each. Two modes:
-
-* default: a proper tuple hash -- xxhash64 over (band_id, band slice),
-  entirely JVM-side inside whole-stage codegen (no Python).
-* parity: the reference's order-insensitive additive formula
-  hash[b] = sum(sig[i] * 433494437) mod buckets (LSH.java:57-59), expressed
-  with the `aggregate` higher-order function. Used by parity tests; its tiny
-  bucket space (10) is exactly what produces the reference's mega-bucket skew
-  (SURVEY.md 4.3).
+signature into `stages` bands and hashes each. Here each band hash is a
+proper tuple hash -- xxhash64 over (band_id, band slice), entirely JVM-side
+inside whole-stage codegen (no Python). The reference's additive band hash
+lives in functions/parity.py (reference_band_hash).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from lsh_for_source_code_spark.config import REFERENCE_BAND_PRIME, PipelineConfig
+from lsh_for_source_code_spark.config import PipelineConfig
 
 
 def band_hashes_col(cfg: PipelineConfig, minhash_col: str = "minhash"):
@@ -28,36 +23,16 @@ def band_hashes_col(cfg: PipelineConfig, minhash_col: str = "minhash"):
     )
 
 
-def parity_band_hashes_col(cfg: PipelineConfig, minhash_col: str = "minhash"):
-    """Reference O10 additive band hash (order-insensitive, mod `buckets`)."""
-    r = cfg.rows_per_band
-    buckets = int(cfg.extra.get("buckets", 10))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
-        lambda b: F.aggregate(
-            F.slice(minhash_col, b * F.lit(r) + 1, r),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc + x * F.lit(REFERENCE_BAND_PRIME)) % F.lit(buckets),
-        ),
-    )
-
-
-def band_files(
-    signed: DataFrame,
-    cfg: PipelineConfig,
-    id_col: str = "file_id",
-    parity: bool = False,
-) -> DataFrame:
+def band_files(signed: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Explode per-file band hashes into the LSH key table
     (file_id, band_id, band_hash). Degenerate rows (empty shingle sets) are
     excluded -- they would otherwise all collide into one mega bucket (the
     reference's 300-file group, SURVEY.md 4.3); they cluster by content_sha
     instead."""
-    col = parity_band_hashes_col(cfg) if parity else band_hashes_col(cfg)
     df = signed
     if "degenerate" in df.columns:
         df = df.filter(~F.col("degenerate"))
     return df.select(
-        F.col(id_col),
-        F.posexplode(col).alias("band_id", "band_hash"),
+        "file_id",
+        F.posexplode(band_hashes_col(cfg)).alias("band_id", "band_hash"),
     )

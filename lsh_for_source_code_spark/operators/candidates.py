@@ -30,6 +30,8 @@ the hot key costs one reducer O(k) -- never O(k^2).
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import DataFrame, functions as F
 
 from lsh_for_source_code_spark.caching import track
@@ -317,85 +319,15 @@ def _chunked_mega_pairs(mega: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def simhash_candidate_pairs(
-    signed: DataFrame, cfg: PipelineConfig, id_col: str = "file_id"
-) -> DataFrame:
-    """Second recall channel (north_star): pairs whose 64-bit SimHash
-    fingerprints differ in <= hamming_max bits.
-
-    Blocked by the 4-way band decomposition of the fingerprint (pigeonhole:
-    hamming <= 3 over 4 blocks => at least one 16-bit block matches exactly),
-    so this is again a groupBy-on-block-key self-join, never a cross join.
-
-    Skew defense (VERDICT r1 wrong#2): identical to candidate_pairs --
-    block occupancy + anchor come from one map-side-combined aggregation,
-    blocks with <= cfg.simhash_max_block members emit exact all-pairs, mega
-    blocks use the same random chunked topology as the MinHash path (r2 ADVICE:
-    the pure min-id star lost every mega-block pair whose members were
-    mutually within t but > t from the anchor; with ~C-sized chunks each
-    member gets C-1 direct hamming comparisons plus a chunk-min -> anchor
-    connectivity edge). All emitted pairs still pass the hamming filter, so
-    the output contract (hamming <= t) is unchanged.
-
-    Extreme-scale note: a 16-bit block value holds ~n/2^16 files even for
-    UNRELATED fingerprints, so at 10^12 files every block is a ~15M-member
-    junk block and recall rides entirely on the chunk lottery. MinHash-style
-    key refinement cannot help here -- extending the key with other
-    fingerprint bits breaks the pigeonhole guarantee (those bits may carry
-    the <= t differences). The production lever is the Manku et al. (WWW'07)
-    table design, implemented in simhash_candidate_pairs_tables: set
-    cfg.simhash_table_blocks (and optionally widen cfg.simhash_bits past 64
-    via functions/minhash.simhash_fingerprints) and this function delegates.
-    """
-    if cfg.simhash_table_blocks is not None:
-        if "fp" in signed.columns:
-            fps = signed
-        else:
-            if cfg.simhash_bits > 64:
-                raise ValueError(
-                    "simhash_bits > 64 needs multi-word fingerprints: pass "
-                    "functions/minhash.simhash_fingerprints output (fp column)"
-                )
-            cols = [F.col(id_col).alias("file_id"), F.array("simhash").alias("fp")]
-            if "degenerate" in signed.columns:
-                cols.append(F.col("degenerate"))
-            fps = signed.select(*cols)
-        return simhash_candidate_pairs_tables(fps, cfg, id_col="file_id")
-    t = cfg.simhash_hamming_max
-    n_blocks = t + 1
-    width = cfg.simhash_bits // n_blocks
-    df = signed
-    if "degenerate" in df.columns:
-        df = df.filter(~F.col("degenerate"))
-    BLOCK_KEY = ["block_id", "block_val"]
-    blocks = df.select(
-        F.col(id_col).alias("file_id"),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
-                        F.lit((1 << width) - 1)
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("block_id", "block_val"),
-    )
-    # single-level occupancy stats (r6): partial aggregation bounds hot
-    # blocks at #map-partitions reducer rows; see candidate_pairs.
-    stats = blocks.groupBy(*BLOCK_KEY).agg(
-        F.count("*").alias("sz"), F.min("file_id").alias("anchor")
-    )
-    tagged = track(blocks.join(stats.hint("shuffle_hash"), on=BLOCK_KEY).persist())
-
-    small = tagged.filter(
-        (F.col("sz") >= 2) & (F.col("sz") <= cfg.simhash_max_block)
-    ).select(*BLOCK_KEY, "file_id", "simhash")
-    l, r = small.alias("l"), small.alias("r").hint("shuffle_hash")
-    pairs_small = l.join(
+def _sim_self_join(df: DataFrame, keys: list[str]) -> DataFrame:
+    """All (id_a < id_b) pairs sharing `keys`, carrying both fingerprints.
+    Kept as a SHUFFLE_HASH self-join: the HOF pair expansion was rejected
+    for SimHash because a 1024-member key makes ~12 MB pair arrays per row
+    in the worst case (OPTIMIZATION_r06.md)."""
+    l, r = df.alias("l"), df.alias("r").hint("shuffle_hash")
+    return l.join(
         r,
-        on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in BLOCK_KEY]
+        on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
         + [F.col("l.file_id") < F.col("r.file_id")],
     ).select(
         F.col("l.file_id").alias("id_a"),
@@ -404,130 +336,54 @@ def simhash_candidate_pairs(
         F.col("r.simhash").alias("sim_b"),
     )
 
-    # mega blocks: random chunked topology (mirrors candidate_pairs) --
-    # exact all-pairs inside ~C-sized random chunks plus chunk-min -> anchor
-    # edges for block-wide connectivity. The anchor's own row is guaranteed
-    # present in the block, so the (anchor, anchor_sim) lookup joins back
-    # linearly -- never a self-join on the hot key.
-    mega = tagged.filter(F.col("sz") > cfg.simhash_max_block)
-    chunk_target = max(int(cfg.mega_chunk_target), 1)
-    n_chunks = F.greatest(
-        F.ceil(F.col("sz") / F.lit(chunk_target)).cast("long"),
-        F.lit(1).cast("long"),
-    )
-    mega_c = mega.withColumn(
-        "_chunk", F.pmod(F.xxhash64(*BLOCK_KEY, "file_id"), n_chunks)
-    ).select(*BLOCK_KEY, "_chunk", "file_id", "simhash", "anchor")
-    anchors = (
-        mega.filter(F.col("file_id") == F.col("anchor"))
-        .select(*BLOCK_KEY, "anchor", F.col("simhash").alias("anchor_sim"))
-        .dropDuplicates(BLOCK_KEY)
-    )
-    if chunk_target > 1:
-        ml = mega_c.alias("l")
-        mr = mega_c.alias("r").hint("shuffle_hash")
-        chunk_pairs = ml.join(
-            mr,
-            on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in BLOCK_KEY]
-            + [
-                F.col("l._chunk") == F.col("r._chunk"),
-                F.col("l.file_id") < F.col("r.file_id"),
-            ],
-        ).select(
-            F.col("l.file_id").alias("id_a"),
-            F.col("r.file_id").alias("id_b"),
-            F.col("l.simhash").alias("sim_a"),
-            F.col("r.simhash").alias("sim_b"),
-        )
-        anchor_edges = (
-            mega_c.groupBy(*BLOCK_KEY, "_chunk")
-            .agg(
-                F.min("file_id").alias("_cmin"),
-                F.min_by("simhash", "file_id").alias("_cmin_sim"),
-            )
-            .join(anchors, on=BLOCK_KEY)
-            .filter(F.col("_cmin") != F.col("anchor"))
-            .select(
-                F.col("anchor").alias("id_a"),
-                F.col("_cmin").alias("id_b"),
-                F.col("anchor_sim").alias("sim_a"),
-                F.col("_cmin_sim").alias("sim_b"),
-            )
-        )
-        pairs_mega = chunk_pairs.unionByName(anchor_edges)
-    else:
-        pairs_mega = (
-            mega.filter(F.col("file_id") != F.col("anchor"))
-            .join(anchors.drop("anchor"), on=BLOCK_KEY)
-            .select(
-                F.col("anchor").alias("id_a"),
-                F.col("file_id").alias("id_b"),
-                F.col("anchor_sim").alias("sim_a"),
-                F.col("simhash").alias("sim_b"),
-            )
-        )
-    return (
-        pairs_small.select("id_a", "id_b", "sim_a", "sim_b")
-        .unionByName(pairs_mega)
-        .withColumn(
-            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-        )
-        .filter(F.col("hamming") <= t)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
-    )
 
+def simhash_candidate_pairs(signed: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Second recall channel (north_star): (id_a, id_b, hamming) for pairs
+    whose 64-bit SimHash fingerprints differ in <= t = hamming_max bits.
 
-def simhash_candidate_pairs_tables(
-    fps: DataFrame, cfg: PipelineConfig, id_col: str = "file_id"
-) -> DataFrame:
-    """Generalized Manku (WWW'07) SimHash tables (VERDICT r3 next#5): the
-    fingerprint (array<long> words, cfg.simhash_bits wide -- see
-    functions/minhash.simhash_fingerprints) splits into m =
-    cfg.simhash_table_blocks equal blocks; one table per
-    (m - hamming_max)-block combination, keyed on those blocks' concatenated
-    values. Pigeonhole: <= hamming_max differing bits touch <= hamming_max
-    blocks, so every true pair agrees exactly on at least one combination's
-    key. Key entropy = (m - t) * bits / m -- sized via config so that at
-    the target corpus size buckets of UNRELATED fingerprints stay below
-    cfg.simhash_max_block, instead of the 4x16-bit design whose 16-bit keys
-    degenerate into the mega-chunk lottery past ~2^16 * max_block docs
-    (demonstrated at test scale in test_operators.py).
+    Block tables (Manku et al., WWW'07): the fingerprint splits into m =
+    cfg.simhash_table_blocks (default t + 1) equal blocks, and one table is
+    keyed on every (m - t)-block combination. Pigeonhole: <= t differing
+    bits touch <= t blocks, so every true pair agrees exactly on at least
+    one table's key -- a groupBy-on-key self-join, never a cross join. A
+    single-block combination keys on the block value itself (m = t + 1:
+    the classic 4x16-bit design); a wider one keys on xxhash64(table, blocks).
+    Key entropy is (m - t) * bits / m, so larger m keeps buckets of
+    UNRELATED fingerprints below simhash_max_block at corpus sizes where
+    16-bit keys (~n/2^16 members each) degenerate into the mega-chunk
+    lottery (demonstrated at test scale in test_operators.py). Cost is
+    C(m, t) key rows per doc instead of t + 1.
 
-    Topology per key is identical to the legacy path: partial-aggregated
-    occupancy stats, exact all-pairs under simhash_max_block, random
-    ~C-sized chunks + chunk-min -> anchor edges above it. Output contract
-    unchanged: (id_a, id_b, hamming) with hamming <= cfg.simhash_hamming_max.
-    """
-    from itertools import combinations
-
+    Skew defense (VERDICT r1 wrong#2), as in candidate_pairs: occupancy +
+    anchor come from one map-side-combined aggregation, keys with <=
+    cfg.simhash_max_block members emit exact all-pairs, mega keys use the
+    random chunked topology (r2 ADVICE: each member gets C-1 direct
+    comparisons plus a chunk-min -> anchor connectivity edge; C <= 1 is the
+    pure min-id star). All emitted pairs pass the hamming filter, so the
+    output contract (hamming <= t) holds on every path."""
     t = cfg.simhash_hamming_max
-    m = int(cfg.simhash_table_blocks or (t + 1))
-    bits = cfg.simhash_bits
-    width = bits // m
-    combos = list(combinations(range(m), m - t))
-
-    df = fps
+    m = cfg.simhash_table_blocks or t + 1
+    width = cfg.simhash_bits // m
+    blocks = [
+        F.col("simhash")
+        if width == 64
+        else F.shiftrightunsigned("simhash", i * width).bitwiseAND(
+            F.lit((1 << width) - 1)
+        )
+        for i in range(m)
+    ]
+    keys = [
+        blocks[combo[0]]
+        if len(combo) == 1
+        else F.xxhash64(F.lit(ci), *[blocks[b] for b in combo])
+        for ci, combo in enumerate(combinations(range(m), m - t))
+    ]
+    df = signed
     if "degenerate" in df.columns:
         df = df.filter(~F.col("degenerate"))
-
-    def block(i: int):
-        word = (i * width) // 64
-        shift = (i * width) % 64
-        w = F.element_at("fp", word + 1)
-        if width == 64:
-            return w
-        return F.shiftrightunsigned(w, shift).bitwiseAND(F.lit((1 << width) - 1))
-
-    keys = [
-        F.xxhash64(F.lit(ci), *[block(b) for b in combo])
-        for ci, combo in enumerate(combos)
-    ]
     KEY = ["table_id", "key"]
     rows = df.select(
-        F.col(id_col).alias("file_id"),
-        "fp",
-        F.posexplode(F.array(*keys)).alias("table_id", "key"),
+        "file_id", "simhash", F.posexplode(F.array(*keys)).alias(*KEY)
     )
     # single-level occupancy stats (r6): partial aggregation bounds hot
     # keys at #map-partitions reducer rows; see candidate_pairs.
@@ -536,74 +392,66 @@ def simhash_candidate_pairs_tables(
     )
     tagged = track(rows.join(stats.hint("shuffle_hash"), on=KEY).persist())
 
-    small = tagged.filter(
-        (F.col("sz") >= 2) & (F.col("sz") <= cfg.simhash_max_block)
-    ).select(*KEY, "file_id", "fp")
-    sl, sr = small.alias("l"), small.alias("r").hint("shuffle_hash")
-    pairs_small = sl.join(
-        sr,
-        on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in KEY]
-        + [F.col("l.file_id") < F.col("r.file_id")],
-    ).select(
-        F.col("l.file_id").alias("id_a"),
-        F.col("r.file_id").alias("id_b"),
-        F.col("l.fp").alias("fp_a"),
-        F.col("r.fp").alias("fp_b"),
+    pairs_small = _sim_self_join(
+        tagged.filter(
+            (F.col("sz") >= 2) & (F.col("sz") <= cfg.simhash_max_block)
+        ).select(*KEY, "file_id", "simhash"),
+        KEY,
     )
 
+    # mega keys: random chunked topology (mirrors candidate_pairs). The
+    # anchor's own row is guaranteed present under its key, so the
+    # (anchor, anchor_sim) lookup joins back linearly -- never a self-join
+    # on the hot key.
     mega = tagged.filter(F.col("sz") > cfg.simhash_max_block)
-    C = max(int(cfg.mega_chunk_target), 1)
-    n_chunks = F.greatest(
-        F.ceil(F.col("sz") / F.lit(C)).cast("long"), F.lit(1).cast("long")
-    )
-    mega_c = mega.withColumn(
-        "_chunk", F.pmod(F.xxhash64(*KEY, "file_id"), n_chunks)
-    ).select(*KEY, "_chunk", "file_id", "fp", "anchor")
     anchors = (
         mega.filter(F.col("file_id") == F.col("anchor"))
-        .select(*KEY, "anchor", F.col("fp").alias("anchor_fp"))
+        .select(*KEY, "anchor", F.col("simhash").alias("anchor_sim"))
         .dropDuplicates(KEY)
     )
-    ml, mr = mega_c.alias("l"), mega_c.alias("r").hint("shuffle_hash")
-    chunk_pairs = ml.join(
-        mr,
-        on=[F.col(f"l.{k}") == F.col(f"r.{k}") for k in KEY]
-        + [
-            F.col("l._chunk") == F.col("r._chunk"),
-            F.col("l.file_id") < F.col("r.file_id"),
-        ],
-    ).select(
-        F.col("l.file_id").alias("id_a"),
-        F.col("r.file_id").alias("id_b"),
-        F.col("l.fp").alias("fp_a"),
-        F.col("r.fp").alias("fp_b"),
-    )
-    anchor_edges = (
-        mega_c.groupBy(*KEY, "_chunk")
-        .agg(
-            F.min("file_id").alias("_cmin"),
-            F.min_by("fp", "file_id").alias("_cmin_fp"),
+    chunk_target = max(int(cfg.mega_chunk_target), 1)
+    if chunk_target > 1:
+        n_chunks = F.greatest(
+            F.ceil(F.col("sz") / F.lit(chunk_target)).cast("long"),
+            F.lit(1).cast("long"),
         )
-        .join(anchors, on=KEY)
-        .filter(F.col("_cmin") != F.col("anchor"))
-        .select(
-            F.col("anchor").alias("id_a"),
-            F.col("_cmin").alias("id_b"),
-            F.col("anchor_fp").alias("fp_a"),
-            F.col("_cmin_fp").alias("fp_b"),
+        mega_c = mega.withColumn(
+            "_chunk", F.pmod(F.xxhash64(*KEY, "file_id"), n_chunks)
+        ).select(*KEY, "_chunk", "file_id", "simhash")
+        anchor_edges = (
+            mega_c.groupBy(*KEY, "_chunk")
+            .agg(
+                F.min("file_id").alias("_cmin"),
+                F.min_by("simhash", "file_id").alias("_cmin_sim"),
+            )
+            .join(anchors, on=KEY)
+            .filter(F.col("_cmin") != F.col("anchor"))
+            .select(
+                F.col("anchor").alias("id_a"),
+                F.col("_cmin").alias("id_b"),
+                F.col("anchor_sim").alias("sim_a"),
+                F.col("_cmin_sim").alias("sim_b"),
+            )
         )
-    )
-    hamming = F.aggregate(
-        F.zip_with(
-            "fp_a", "fp_b", lambda x, y: F.bit_count(x.bitwiseXOR(y))
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+        pairs_mega = _sim_self_join(mega_c, [*KEY, "_chunk"]).unionByName(
+            anchor_edges
+        )
+    else:
+        pairs_mega = (
+            mega.filter(F.col("file_id") != F.col("anchor"))
+            .join(anchors.drop("anchor"), on=KEY)
+            .select(
+                F.col("anchor").alias("id_a"),
+                F.col("file_id").alias("id_b"),
+                F.col("anchor_sim").alias("sim_a"),
+                F.col("simhash").alias("sim_b"),
+            )
+        )
     return (
-        pairs_small.unionByName(chunk_pairs)
-        .unionByName(anchor_edges)
-        .withColumn("hamming", hamming)
+        pairs_small.unionByName(pairs_mega)
+        .withColumn(
+            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+        )
         .filter(F.col("hamming") <= t)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])

@@ -20,6 +20,7 @@ from lsh_for_source_code_spark.functions.tokenize import shingle_files
 from lsh_for_source_code_spark.operators.banding import band_files
 from lsh_for_source_code_spark.operators.candidates import BAND_KEY, candidate_pairs
 from lsh_for_source_code_spark.operators.verify import verify_pairs
+from lsh_for_source_code_spark.plans.pipeline import with_file_id
 
 
 def delta_files(new_batch: DataFrame, known_signatures: DataFrame) -> DataFrame:
@@ -259,8 +260,7 @@ def streaming_ingest(spark, input_path: str, checkpoint: str, cfg: PipelineConfi
     )
     signed = sign_files(
         shingle_files(
-            stream.withColumn("file_id", F.xxhash64("repo", "path", "commit")),
-            k=cfg.shingle_k,
+            with_file_id(stream), k=cfg.shingle_k, min_freq=cfg.min_token_freq
         ).select("file_id", "content_sha", "n_tokens", "shingles", "counts"),
         cfg,
     )

@@ -415,13 +415,13 @@ def test_run_pipeline_runs_collision_audit_by_default(spark, monkeypatch):
 
 
 def test_cluster_profile_output_identical_to_default(spark):
-    """PipelineConfig.cluster_profile() changes COST knobs only (shuffle
-    partitions, bucketed checkpoints) -- verified pairs and clusters must
-    be bit-identical to the default config on the same input, so switching
-    profiles between a laptop run and a 1000-executor run can never change
-    results. executors=1 keeps the partition count test-sized."""
+    """PipelineConfig.cluster_profile() changes COST knobs only (bucketed
+    checkpoints) -- verified pairs and clusters must be bit-identical to
+    the default config on the same input, so switching profiles between a
+    laptop run and a 1000-executor run can never change results.
+    executors=1 keeps the bucket count test-sized."""
     prof = PipelineConfig.cluster_profile(executors=1)
-    assert prof.checkpoint_buckets == prof.shuffle_partitions
+    assert prof.checkpoint_buckets == 32
     assert prof.jaccard_threshold == CFG.jaccard_threshold
     assert prof.mega_refine_levels == CFG.mega_refine_levels
     df, _ = corpus_df(spark, n_files=120, seed=9)
@@ -432,7 +432,7 @@ def test_cluster_profile_output_identical_to_default(spark):
     assert len(base_pairs) > 0
     assert got_pairs == base_pairs
     # 1000-executor shape is structurally valid too (no pipeline run)
-    assert PipelineConfig.cluster_profile().shuffle_partitions == 16000
+    assert PipelineConfig.cluster_profile().checkpoint_buckets == 16000
 
 
 def test_lcs_hybrid_search_matches_per_pair_across_crossover():
@@ -541,6 +541,15 @@ def test_bucketed_checkpoint_equivalence_and_plan(spark, tmp_path):
 def test_config_rejects_bad_checkpoint_buckets():
     with pytest.raises(ValueError):
         PipelineConfig(checkpoint_buckets=0)
+
+
+def test_config_rejects_bad_simhash_layout():
+    # the fingerprint is one 64-bit long: wider layouts must fail loudly
+    with pytest.raises(ValueError):
+        PipelineConfig(simhash_bits=128)
+    # pigeonhole needs more blocks than differing bits
+    with pytest.raises(ValueError):
+        PipelineConfig(simhash_table_blocks=3, simhash_hamming_max=3)
 
 
 def test_verify_broadcast_gate_output_identical(spark):
