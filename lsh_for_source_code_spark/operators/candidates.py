@@ -91,7 +91,10 @@ def candidate_pairs(
 
     `signed` (optional, (file_id, minhash)) enables similarity-preserving
     refinement of mega buckets (cfg.mega_refine_levels) before the chunked
-    fallback -- see _refine_mega below.
+    fallback -- see _refine_mega below. Without it (the delta path) the
+    refinement is left out of the plan, not unioned in as an empty frame:
+    an empty driver-side frame is a parallelized Python RDD, one
+    Python-worker task per partition on every evaluation.
 
     Bucket size + anchor come from ONE groupBy with map-side partial
     aggregation (r6: the explicit salted two-level variant was measured
@@ -153,21 +156,22 @@ def candidate_pairs(
         "anchor",
     )
     levels = int(cfg.mega_refine_levels) if signed is not None else 0
-    refined_exact, residual = _refine_mega(mega, signed, cfg, levels)
-    pairs_mega = _chunked_mega_pairs(residual, cfg)
+    if levels > 0:
+        refined_exact, mega = _refine_mega(mega, signed, cfg, levels)
+        pairs_small = pairs_small.unionByName(refined_exact)
+    pairs_mega = _chunked_mega_pairs(mega, cfg)
 
     # The final groupBy deduplicates pairs found in several bands (or at
     # several refinement levels) and counts the emissions per pair.
     return (
-        pairs_small.unionByName(refined_exact)
-        .unionByName(pairs_mega)
+        pairs_small.unionByName(pairs_mega)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared_bands"))
     )
 
 
 def _refine_mega(
-    mega: DataFrame, signed: DataFrame | None, cfg: PipelineConfig, levels: int
+    mega: DataFrame, signed: DataFrame, cfg: PipelineConfig, levels: int
 ) -> tuple[DataFrame, DataFrame]:
     """Similarity-preserving mega-bucket refinement (the scale defense
     against JUNK buckets -- see config.mega_refine_levels).
@@ -186,11 +190,6 @@ def _refine_mega(
     Returns (refined_exact_pairs(id_a, id_b), residual_mega rows with
     columns (band_id, _key, file_id, sz, anchor)).
     """
-    empty_pairs = mega.sparkSession.createDataFrame(
-        [], schema="id_a long, id_b long"
-    )
-    if levels <= 0:
-        return empty_pairs, mega
     r, p = cfg.rows_per_band, cfg.num_perm
     C = max(int(cfg.mega_chunk_target), 2)
     cap = int(cfg.max_bucket_pairs)

@@ -83,14 +83,6 @@ def connected_components(
         mapping = _driver_union_find(
             zip(head["src"].to_numpy(), head["dst"].to_numpy())
         )
-        if mapping:
-            labels = spark.createDataFrame(
-                pd.DataFrame(
-                    {"node": list(mapping.keys()), "label": list(mapping.values())}
-                ).astype("int64")
-            )
-        else:
-            labels = spark.createDataFrame([], schema="node long, label long")
         if nodes is not None:
             all_nodes = nodes.select(
                 F.col(nodes.columns[0]).cast("long").alias("node")
@@ -103,11 +95,22 @@ def connected_components(
                 .unionByName(e.select(F.col("dst").alias("node")))
                 .distinct()
             )
-        labels = (
-            all_nodes.join(F.broadcast(labels), "node", "left")
-            .withColumn("label", F.coalesce("label", "node"))
-            .select("node", "label")
-        )
+        if mapping:
+            mapped = spark.createDataFrame(
+                pd.DataFrame(
+                    {"node": list(mapping.keys()), "label": list(mapping.values())}
+                ).astype("int64")
+            )
+            labels = (
+                all_nodes.join(F.broadcast(mapped), "node", "left")
+                .withColumn("label", F.coalesce("label", "node"))
+                .select("node", "label")
+            )
+        else:
+            # no edges: every node is its own cluster. Labelled in the JVM
+            # -- an empty driver-side labels frame would be a parallelized
+            # Python RDD, Python-worker tasks for zero rows.
+            labels = all_nodes.select("node", F.col("node").alias("label"))
         return labels.select(
             F.col("node").alias("file_id"), F.col("label").alias("cluster_id")
         )

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from lsh_for_source_code_spark.caching import track
 from lsh_for_source_code_spark.config import PipelineConfig
 from lsh_for_source_code_spark.functions.minhash import sign_files
 from lsh_for_source_code_spark.functions.tokenize import shingle_files
@@ -43,13 +44,27 @@ def incremental_update(
     Returns the new stage rows to append plus the verified pairs involving
     at least one new file. At 10^12-file scale this is the difference
     between re-shuffling the world and shuffling the day's commits.
+
+    Preconditions: `known_shingled` holds one row per `file_id` (it is the
+    base's S1 table), and `known_bands` are the bands of those files. Only
+    the delta side of the verify feature table is deduplicated: the delta
+    is left-anti-joined against the base, so the two are disjoint and the
+    base table is scanned, never reshuffled.
+
+    The delta's shingles (S1) and bands (S4) are persisted (released by
+    `caching.release_all`): each has several consumers -- the touched-bucket
+    keys, the band union, the `new_ids` semi-joins, the verify broadcast
+    probe and feature sides -- and uncached every consumer re-runs the
+    shingle and signature Python UDFs.
     """
     delta = delta_files(new_batch, known_shingled)
-    d_shingled = shingle_files(delta, k=cfg.shingle_k, min_freq=cfg.min_token_freq).select(
-        "file_id", "content_sha", "n_tokens", "shingles", "counts"
+    d_shingled = track(
+        shingle_files(delta, k=cfg.shingle_k, min_freq=cfg.min_token_freq)
+        .select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+        .persist()
     )
     d_signed = sign_files(d_shingled, cfg)
-    d_bands = band_files(d_signed, cfg)
+    d_bands = track(band_files(d_signed, cfg).persist())
 
     touched = d_bands.select(*BAND_KEY).distinct()
     relevant_old = known_bands.join(touched, BAND_KEY, "left_semi")
@@ -66,8 +81,8 @@ def incremental_update(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    shingle_union = known_shingled.unionByName(d_shingled).dropDuplicates(["file_id"])
-    verified = verify_pairs(cands_new, shingle_union, cfg)
+    features = known_shingled.unionByName(d_shingled.dropDuplicates(["file_id"]))
+    verified = verify_pairs(cands_new, features, cfg)
     return {
         "delta_shingled": d_shingled,
         "delta_signatures": d_signed,

@@ -3,12 +3,16 @@
 from __future__ import annotations
 
 import hashlib
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from lsh_for_source_code_spark.caching import release_all
 from lsh_for_source_code_spark.config import PipelineConfig
+from lsh_for_source_code_spark.corpus import generate_corpus
 from lsh_for_source_code_spark.functions.minhash import sign_files
 from lsh_for_source_code_spark.functions.multimodal import (
     extract_media_features,
@@ -16,6 +20,7 @@ from lsh_for_source_code_spark.functions.multimodal import (
 )
 from lsh_for_source_code_spark.functions.tokenize import shingle_files
 from lsh_for_source_code_spark.operators.banding import band_files
+from lsh_for_source_code_spark.plans.pipeline import run_pipeline, with_file_id
 from lsh_for_source_code_spark.streaming.incremental import (
     delta_files,
     incremental_update,
@@ -59,6 +64,48 @@ def test_incremental_update_finds_cross_batch_pairs(spark):
     assert (1, 3) in pairs
     # old-old pairs are not re-verified
     assert all(3 in p for p in pairs)
+
+
+@pytest.mark.parametrize("max_bucket_pairs", [64, 10000])
+def test_delta_equals_batch(spark, max_bucket_pairs):
+    """incremental_update(D; B) returns exactly the run_pipeline(B u D)
+    verified pairs that have an endpoint in D, jaccard included.
+
+    Precondition: the corpus holds no exact-content duplicates. Batch S2
+    short-circuits them (only one representative per content_sha is signed,
+    the copies join through exact-dup edges), while the delta path signs
+    and verifies every new file, so the two differ on exact copies by
+    design. max_bucket_pairs=64 sends the boilerplate bands down the mega
+    path; 10000 keeps every bucket on exact all-pairs."""
+    cfg = replace(PipelineConfig(), max_bucket_pairs=max_bucket_pairs)
+    files = generate_corpus(600, 7).files.drop_duplicates("content")
+    ids = with_file_id(spark.createDataFrame(files))
+    in_delta = F.pmod("file_id", F.lit(5)) == 0
+    base = shingle_files(
+        ids.filter(~in_delta), k=cfg.shingle_k, min_freq=cfg.min_token_freq
+    ).select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+    bands = band_files(sign_files(base, cfg), cfg)
+    delta = ids.filter(in_delta).select("file_id", "content")
+
+    def triples(pairs):
+        return {
+            (r.id_a, r.id_b, round(r.jaccard, 9))
+            for r in pairs.select("id_a", "id_b", "jaccard").collect()
+        }
+
+    got = triples(incremental_update(delta, base, bands, cfg)["verified_new_pairs"])
+    release_all()
+    new_ids = ids.filter(in_delta).select("file_id")
+    batch = run_pipeline(spark, spark.createDataFrame(files), cfg)["verified_pairs"]
+    want = triples(
+        batch.join(new_ids.withColumnRenamed("file_id", "id_a"), "id_a", "left_semi")
+        .unionByName(
+            batch.join(new_ids.withColumnRenamed("file_id", "id_b"), "id_b", "left_semi")
+        )
+    )
+    release_all()
+    assert want, "the split must put verified pairs on the delta side"
+    assert got == want
 
 
 def test_media_feature_extraction_and_dedup(spark):

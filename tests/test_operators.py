@@ -350,6 +350,20 @@ def test_connected_components_chain_star_singleton(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
+def test_connected_components_no_edges(spark):
+    """An empty edge set makes every node its own cluster, labelled inside
+    the JVM: the executed plan scans no driver-side RDD (an empty
+    createDataFrame is a parallelized Python RDD, Python-worker tasks for
+    zero rows)."""
+    edges = spark.range(0).select(F.col("id").alias("id_a"), F.col("id").alias("id_b"))
+    nodes = spark.range(5).select(F.col("id").alias("file_id"))
+    out = connected_components(edges, nodes=nodes)
+    got = {r.file_id: r.cluster_id for r in out.collect()}
+    assert got == {i: i for i in range(5)}
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_connected_components_distributed_path_matches_driver_path(spark):
     edges = spark.createDataFrame(
         pd.DataFrame({"id_a": [1, 2, 3, 10, 10], "id_b": [2, 3, 4, 11, 12]})

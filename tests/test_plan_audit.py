@@ -13,6 +13,8 @@ is the regression net.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 
 from lsh_for_source_code_spark.entry_queries import QUERIES
@@ -218,29 +220,56 @@ def test_verify_broadcast_gate_disables(spark):
     shape for corpora whose feature table cannot ship to every executor."""
     from pyspark.sql import functions as F
 
-    from lsh_for_source_code_spark.config import PipelineConfig
     from lsh_for_source_code_spark.entry_queries import (
         FLAGSHIP_CFG,
-        _docs_as_files,
         lsh_verified_pairs,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
         F.col("doc_id") % 5 == 0
     )
-    cfg = PipelineConfig(
-        **{
-            **{
-                f.name: getattr(FLAGSHIP_CFG, f.name)
-                for f in FLAGSHIP_CFG.__dataclass_fields__.values()
-                if f.name != "extra"
-            },
-            "verify_broadcast_max_rows": 0,
-        }
-    )
+    cfg = replace(FLAGSHIP_CFG, verify_broadcast_max_rows=0)
     p = _plan(spark, lsh_verified_pairs(docs, cfg, 0.9))
     assert "BroadcastHashJoin" not in p
     assert "ShuffledHashJoin" in p
+
+
+def test_delta_path_scans_no_driver_rdd(spark):
+    """The delta path (candidate_pairs without `signed`, and the whole
+    incremental_update) must scan no driver-side RDD in its executed plan.
+    An empty createDataFrame unioned in for the skipped mega refinement is
+    a parallelized Python RDD: one Python-worker task per partition on
+    every evaluation, for zero rows."""
+    from pyspark.sql import functions as F
+
+    from lsh_for_source_code_spark.caching import release_all
+    from lsh_for_source_code_spark.entry_queries import FLAGSHIP_CFG, _docs_as_files
+    from lsh_for_source_code_spark.functions.minhash import sign_files
+    from lsh_for_source_code_spark.functions.tokenize import shingle_files
+    from lsh_for_source_code_spark.operators.banding import band_files
+    from lsh_for_source_code_spark.operators.candidates import candidate_pairs
+    from lsh_for_source_code_spark.streaming.incremental import incremental_update
+
+    cfg = FLAGSHIP_CFG
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
+        F.col("doc_id") % 5 == 0
+    )
+    base = shingle_files(
+        _docs_as_files(docs.filter(F.col("doc_id") % 10 == 5)),
+        k=cfg.shingle_k,
+        min_freq=cfg.min_token_freq,
+    ).select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+    bands = band_files(sign_files(base, cfg), cfg)
+    delta = _docs_as_files(docs.filter(F.col("doc_id") % 10 == 0))
+    for df in (
+        candidate_pairs(bands, cfg),
+        incremental_update(delta, base, bands, cfg)["verified_new_pairs"],
+    ):
+        df.collect()
+        p = _plan(spark, df)
+        assert "isFinalPlan=true" in p
+        assert "ExistingRDD" not in p, p
+    release_all()
 
 
 def test_partial_aggregation_before_exchange(spark):
