@@ -12,6 +12,8 @@ input (doc_id = file_id, text = content); the real pipeline API over the
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -20,15 +22,18 @@ from pyspark.sql.window import Window
 from lsh_for_source_code_spark.caching import track
 from lsh_for_source_code_spark.config import PipelineConfig
 from lsh_for_source_code_spark.functions.minhash import sign_files
-from lsh_for_source_code_spark.functions.tokenize import TOKEN_RE, shingle_files
+from lsh_for_source_code_spark.functions.tokenize import TOKEN_RE
 from lsh_for_source_code_spark.operators.banding import band_files
 from lsh_for_source_code_spark.operators.candidates import (
     bucket_occupancy,
-    candidate_pairs,
     simhash_candidate_pairs,
 )
 from lsh_for_source_code_spark.operators.components import connected_components
-from lsh_for_source_code_spark.operators.verify import verify_pairs
+from lsh_for_source_code_spark.plans.pipeline import (
+    containment_pairs,
+    lsh_stages,
+    shingle_stage,
+)
 from lsh_for_source_code_spark.streaming.incremental import incremental_update
 
 STOPWORDS = ["the", "and", "of", "to", "in", "is", "that", "it", "for", "on"]
@@ -72,21 +77,15 @@ def _shingled_signed(docs: DataFrame, cfg: PipelineConfig):
     are registered with caching.track so long-lived sessions can release
     them after materializing (ADVICE r1: persist leak)."""
     shingled = track(
-        shingle_files(
-            _docs_as_files(docs), k=cfg.shingle_k, min_freq=cfg.min_token_freq
-        )
-        .select("file_id", "n_tokens", "shingles", "counts")
-        .persist()
+        shingle_stage(_docs_as_files(docs), cfg).drop("content_sha").persist()
     )
     return shingled, track(sign_files(shingled, cfg).persist())
 
 
 def lsh_verified_pairs(docs: DataFrame, cfg: PipelineConfig, theta: float) -> DataFrame:
-    """shingle -> sign -> band -> candidates -> exact-verify, jaccard-only."""
+    """shingle -> sign -> band -> candidates -> exact-verify."""
     shingled, signed = _shingled_signed(docs, cfg)
-    bands = band_files(signed, cfg)
-    cands = candidate_pairs(bands, cfg, signed=signed)
-    pairs = verify_pairs(cands, shingled, cfg, compute_overlap=False)
+    _, _, pairs = lsh_stages(signed, shingled, cfg)
     return pairs.filter(F.col("jaccard") >= theta).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
@@ -515,12 +514,7 @@ def q_delta_dedup(spark, sf_dir):
     )
     cfg = FLAGSHIP_CFG
     known_shingled = track(
-        shingle_files(
-            _docs_as_files(docs.filter(F.col("doc_id") % 10 == 5)),
-            k=cfg.shingle_k,
-            min_freq=cfg.min_token_freq,
-        )
-        .select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+        shingle_stage(_docs_as_files(docs.filter(F.col("doc_id") % 10 == 5)), cfg)
         .persist()
     )
     known_bands = band_files(sign_files(known_shingled, cfg), cfg)
@@ -711,9 +705,7 @@ def q_overlap_dup_pairs(spark, sf_dir):
         max_bucket_pairs=1_000_000,  # exact all-pairs (oracle-matched query)
     )
     shingled, signed = _shingled_signed(docs, cfg)
-    bands = band_files(signed, cfg)
-    cands = candidate_pairs(bands, cfg, signed=signed)
-    pairs = verify_pairs(cands, shingled, cfg)
+    _, _, pairs = lsh_stages(signed, shingled, cfg)
     return pairs.select(
         "id_a", "id_b", F.round("overlap", 6).alias("overlap")
     )
@@ -869,9 +861,9 @@ def q_simhash_hamming_pairs_tables(spark, sf_dir):
 
 def q_containment_pipeline(spark, sf_dir):
     """Rows-only (VERDICT r4 next#7): the LCS containment channel exercised
-    END-TO-END over actual LSH survivors -- the exact integration the
-    production `run_pipeline(with_containment=True)` wiring uses
-    (plans/pipeline.py), not a fixed dimension like q_lcs_containment_pairs.
+    END-TO-END over actual LSH survivors -- the same
+    `plans.pipeline.containment_pairs` that `run_pipeline(with_containment=True)`
+    calls, not a fixed dimension like q_lcs_containment_pairs.
     Flagship subset (doc_id % SUBSET_MOD == 0): shingle -> sign -> band ->
     candidates -> keep_all verify; pairs BELOW the jaccard bar are re-joined
     to content and scored with the hash-bisection LCS UDF (gate probe
@@ -887,9 +879,6 @@ def q_containment_pipeline(spark, sf_dir):
     extract-a-function containment case the north_star names; the query
     then proves the channel finds them while the jaccard channel (by
     construction) cannot."""
-    from lsh_for_source_code_spark.operators.verify import add_lcs_containment
-
-    tau = 0.6
     base = _read(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SUBSET_MOD == 0
     )
@@ -903,17 +892,11 @@ def q_containment_pipeline(spark, sf_dir):
         ).alias("text"),
     )
     docs = base.select("doc_id", "text").unionByName(frags)
-    cfg = FLAGSHIP_CFG
+    cfg = replace(FLAGSHIP_CFG, containment_threshold=0.6)
     shingled, signed = _shingled_signed(docs, cfg)
-    bands = band_files(signed, cfg)
-    cands = candidate_pairs(bands, cfg, signed=signed)
-    loose = verify_pairs(
-        cands, shingled, cfg, keep_all=True, compute_overlap=False
-    ).filter(F.col("jaccard") < cfg.jaccard_threshold)
-    contain = add_lcs_containment(
-        loose, _docs_as_files(docs), min_containment=tau
-    )
-    return contain.filter(F.col("lcs_containment") >= tau).select(
+    _, cands, _ = lsh_stages(signed, shingled, cfg)
+    contain = containment_pairs(cands, shingled, _docs_as_files(docs), cfg)
+    return contain.select(
         "id_a",
         "id_b",
         F.round("jaccard", 6).alias("jaccard"),

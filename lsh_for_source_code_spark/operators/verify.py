@@ -564,13 +564,12 @@ def verify_pairs(
     cfg: PipelineConfig,
     id_col: str = "file_id",
     keep_all: bool = False,
-    compute_overlap: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, jaccard, overlap [, n_shared_bands]) for pairs passing
     jaccard >= jaccard_threshold OR overlap >= overlap_threshold.
 
-    The overlap channel is on when compute_overlap is set AND either
-    keep_all or cfg.overlap_threshold asks for it. The plan:
+    The overlap channel is on exactly when cfg.overlap_threshold is set;
+    otherwise `overlap` is null. The plan:
 
     1. join both sides' shingle arrays (join_pair_features: SHUFFLE_HASH,
        or both sides broadcast when feature_table_fits_broadcast);
@@ -587,16 +586,14 @@ def verify_pairs(
        AND overlap;
     4. the exact threshold filter (skipped under keep_all).
     """
-    compute_overlap = compute_overlap and (
-        keep_all or cfg.overlap_threshold is not None
-    )
+    with_overlap = cfg.overlap_threshold is not None
     joined = join_pair_features(
         candidates,
         shingled,
         id_col,
-        with_counts=compute_overlap,
+        with_counts=with_overlap,
         broadcast_b=feature_table_fits_broadcast(
-            shingled, cfg, with_counts=compute_overlap
+            shingled, cfg, with_counts=with_overlap
         ),
     )
     sz_a, sz_b = F.size("sh_a").cast("double"), F.size("sh_b").cast("double")
@@ -606,7 +603,7 @@ def verify_pairs(
     # FP; the exact post-score filter still decides membership.
     eps = F.lit(1e-12)
 
-    if compute_overlap:
+    if with_overlap:
         if not keep_all:
             nt_bound = F.least("nt_a", "nt_b").cast("double") / F.greatest(
                 F.greatest("nt_a", "nt_b").cast("double"), F.lit(1.0)

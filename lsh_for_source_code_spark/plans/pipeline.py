@@ -27,7 +27,7 @@ from lsh_for_source_code_spark.functions.tokenize import shingle_files
 from lsh_for_source_code_spark.operators.banding import band_files
 from lsh_for_source_code_spark.operators.candidates import candidate_pairs
 from lsh_for_source_code_spark.operators.components import connected_components
-from lsh_for_source_code_spark.operators.verify import verify_pairs
+from lsh_for_source_code_spark.operators.verify import add_lcs_containment, verify_pairs
 
 
 class CheckpointStore:
@@ -229,6 +229,49 @@ def with_file_id(
     return out
 
 
+def shingle_stage(files: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """S1: (file_id, content_sha, n_tokens, shingles, counts) per file.
+    `content` is dropped here -- at 100 TB it dominates bytes, and nothing
+    downstream reads it except the containment channel (which re-joins a
+    tiny pair set). A caller that never reads `content_sha` drops it before
+    persisting; the projection is pruned, so the sha is never computed."""
+    return shingle_files(files, k=cfg.shingle_k, min_freq=cfg.min_token_freq).select(
+        "file_id", "content_sha", "n_tokens", "shingles", "counts"
+    )
+
+
+def lsh_stages(
+    signed: DataFrame,
+    features: DataFrame,
+    cfg: PipelineConfig,
+    keep=lambda name, df: df,
+):
+    """S4 band -> S5 candidates -> S6 verify; returns (bands, candidates,
+    verified). Each stage's output passes through `keep(name, df)`:
+    `run_pipeline` passes `CheckpointStore.materialize`, the declared
+    queries pass nothing and their plans stay lazy."""
+    bands = keep("bands", band_files(signed, cfg))
+    cands = keep("candidate_pairs", candidate_pairs(bands, cfg, signed=signed))
+    verified = keep("verified_pairs", verify_pairs(cands, features, cfg))
+    return bands, cands, verified
+
+
+def containment_pairs(
+    cands: DataFrame, features: DataFrame, files: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """LCS containment channel: the candidates below both the jaccard and
+    the overlap bar, re-joined to `files.content` and kept where their LCS
+    containment reaches cfg.containment_threshold."""
+    loose = verify_pairs(cands, features, cfg, keep_all=True).filter(
+        F.col("jaccard") < cfg.jaccard_threshold
+    )
+    if cfg.overlap_threshold is not None:
+        loose = loose.filter(F.col("overlap") < cfg.overlap_threshold)
+    return add_lcs_containment(
+        loose, files, min_containment=cfg.containment_threshold
+    ).filter(F.col("lcs_containment") >= cfg.containment_threshold)
+
+
 def run_pipeline(
     spark: SparkSession,
     code_files: DataFrame,
@@ -244,14 +287,10 @@ def run_pipeline(
 
     ids = with_file_id(code_files, check_collisions=cfg.check_id_collisions)
 
-    # S1: shingle + sha. `content` is dropped immediately after -- at 100 TB
-    # the content column dominates bytes; nothing downstream reads it except
-    # the optional containment channel (which re-joins a tiny pair set).
+    # S1: shingle + sha.
     shingled = store.materialize(
         "files_shingled",
-        shingle_files(ids, k=cfg.shingle_k, min_freq=cfg.min_token_freq).select(
-            "file_id", "content_sha", "n_tokens", "shingles", "counts"
-        ),
+        shingle_stage(ids, cfg),
         bucket=(
             (("file_id",), cfg.checkpoint_buckets)
             if cfg.checkpoint_buckets and checkpoint_dir
@@ -279,27 +318,10 @@ def run_pipeline(
     # S3: signatures for distinct contents only.
     signed = store.materialize("signatures", sign_files(reps, cfg))
 
-    # S4/S5: banding + skew-capped candidates.
-    bands = store.materialize("bands", band_files(signed, cfg))
-    cands = store.materialize(
-        "candidate_pairs", candidate_pairs(bands, cfg, signed=signed)
-    )
-
-    # S6: exact verification.
-    verified = store.materialize(
-        "verified_pairs", verify_pairs(cands, shingled, cfg)
-    )
+    # S4/S5/S6: banding, skew-capped candidates, exact verification.
+    bands, cands, verified = lsh_stages(signed, shingled, cfg, keep=store.materialize)
     if with_containment:
-        from lsh_for_source_code_spark.operators.verify import add_lcs_containment
-
-        loose = verify_pairs(cands, shingled, cfg, keep_all=True).filter(
-            F.col("jaccard") < cfg.jaccard_threshold
-        )
-        if cfg.overlap_threshold is not None:
-            loose = loose.filter(F.col("overlap") < cfg.overlap_threshold)
-        contain = add_lcs_containment(
-            loose, ids, min_containment=cfg.containment_threshold
-        ).filter(F.col("lcs_containment") >= cfg.containment_threshold)
+        contain = containment_pairs(cands, shingled, ids, cfg)
         verified = verified.unionByName(
             contain.select("id_a", "id_b", "jaccard", "overlap", "n_shared_bands"),
             allowMissingColumns=True,

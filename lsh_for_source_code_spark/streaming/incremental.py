@@ -17,11 +17,10 @@ from pyspark.sql import DataFrame, functions as F
 from lsh_for_source_code_spark.caching import track
 from lsh_for_source_code_spark.config import PipelineConfig
 from lsh_for_source_code_spark.functions.minhash import sign_files
-from lsh_for_source_code_spark.functions.tokenize import shingle_files
 from lsh_for_source_code_spark.operators.banding import band_files
 from lsh_for_source_code_spark.operators.candidates import BAND_KEY, candidate_pairs
 from lsh_for_source_code_spark.operators.verify import verify_pairs
-from lsh_for_source_code_spark.plans.pipeline import with_file_id
+from lsh_for_source_code_spark.plans.pipeline import shingle_stage, with_file_id
 
 
 def delta_files(new_batch: DataFrame, known_signatures: DataFrame) -> DataFrame:
@@ -51,19 +50,19 @@ def incremental_update(
     is left-anti-joined against the base, so the two are disjoint and the
     base table is scanned, never reshuffled.
 
-    The delta's shingles (S1) and bands (S4) are persisted (released by
-    `caching.release_all`): each has several consumers -- the touched-bucket
-    keys, the band union, the `new_ids` semi-joins, the verify broadcast
-    probe and feature sides -- and uncached every consumer re-runs the
-    shingle and signature Python UDFs.
+    The delta's shingles (S1), signatures (S3) and bands (S4) are persisted
+    (released by `caching.release_all`): each has several consumers -- the
+    touched-bucket keys, the band union, the `new_ids` semi-joins, the
+    verify broadcast probe and feature sides, and a caller appending both
+    signatures and bands to its checkpoint tables -- and uncached every
+    consumer re-runs the shingle and signature Python UDFs.
+
+    S5 is the delta's own, not `plans.pipeline.lsh_stages`: touched buckets
+    only, no `signed` (no mega refinement), pairs with a delta endpoint.
     """
     delta = delta_files(new_batch, known_shingled)
-    d_shingled = track(
-        shingle_files(delta, k=cfg.shingle_k, min_freq=cfg.min_token_freq)
-        .select("file_id", "content_sha", "n_tokens", "shingles", "counts")
-        .persist()
-    )
-    d_signed = sign_files(d_shingled, cfg)
+    d_shingled = track(shingle_stage(delta, cfg).persist())
+    d_signed = track(sign_files(d_shingled, cfg).persist())
     d_bands = track(band_files(d_signed, cfg).persist())
 
     touched = d_bands.select(*BAND_KEY).distinct()
@@ -273,12 +272,7 @@ def streaming_ingest(spark, input_path: str, checkpoint: str, cfg: PipelineConfi
         )
         .parquet(input_path)
     )
-    signed = sign_files(
-        shingle_files(
-            with_file_id(stream), k=cfg.shingle_k, min_freq=cfg.min_token_freq
-        ).select("file_id", "content_sha", "n_tokens", "shingles", "counts"),
-        cfg,
-    )
+    signed = sign_files(shingle_stage(with_file_id(stream), cfg), cfg)
     return (
         signed.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint)

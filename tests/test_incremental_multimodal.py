@@ -18,9 +18,12 @@ from lsh_for_source_code_spark.functions.multimodal import (
     extract_media_features,
     media_exact_dups,
 )
-from lsh_for_source_code_spark.functions.tokenize import shingle_files
 from lsh_for_source_code_spark.operators.banding import band_files
-from lsh_for_source_code_spark.plans.pipeline import run_pipeline, with_file_id
+from lsh_for_source_code_spark.plans.pipeline import (
+    run_pipeline,
+    shingle_stage,
+    with_file_id,
+)
 from lsh_for_source_code_spark.streaming.incremental import (
     delta_files,
     incremental_update,
@@ -50,9 +53,7 @@ def test_delta_files_left_anti(spark):
 def test_incremental_update_finds_cross_batch_pairs(spark):
     base_text = " ".join(f"w{i}" for i in range(60))
     old = _files_df(spark, [(1, base_text), (2, "totally other words entirely")])
-    old_shingled = shingle_files(old).select(
-        "file_id", "content_sha", "n_tokens", "shingles", "counts"
-    )
+    old_shingled = shingle_stage(old, CFG)
     old_bands = band_files(sign_files(old_shingled, CFG), CFG)
 
     new = _files_df(spark, [(3, base_text + " extra")]).select(
@@ -60,30 +61,50 @@ def test_incremental_update_finds_cross_batch_pairs(spark):
     )
     out = incremental_update(new, old_shingled, old_bands, CFG)
     assert {r.file_id for r in out["delta_shingled"].collect()} == {3}
+    # cached, so banding and a caller reading both run the signature UDF once
+    assert out["delta_signatures"].is_cached
     pairs = {(r.id_a, r.id_b) for r in out["verified_new_pairs"].collect()}
     assert (1, 3) in pairs
     # old-old pairs are not re-verified
     assert all(3 in p for p in pairs)
 
 
-@pytest.mark.parametrize("max_bucket_pairs", [64, 10000])
-def test_delta_equals_batch(spark, max_bucket_pairs):
-    """incremental_update(D; B) returns exactly the run_pipeline(B u D)
-    verified pairs that have an endpoint in D, jaccard included.
+@pytest.mark.parametrize(
+    "max_bucket_pairs,exact_dups",
+    [
+        pytest.param(64, False, id="64"),
+        pytest.param(10000, False, id="10000"),
+        pytest.param(64, True, id="dups-64"),
+        pytest.param(10000, True, id="dups-10000"),
+    ],
+)
+def test_delta_equals_batch(spark, max_bucket_pairs, exact_dups):
+    """incremental_update(D; B) against the run_pipeline(B u D) verified
+    pairs that have an endpoint in D, jaccard included, for the split
+    D = {pmod(file_id, 5) == 0} of generate_corpus(600, 7).
 
-    Precondition: the corpus holds no exact-content duplicates. Batch S2
-    short-circuits them (only one representative per content_sha is signed,
-    the copies join through exact-dup edges), while the delta path signs
-    and verifies every new file, so the two differ on exact copies by
-    design. max_bucket_pairs=64 sends the boilerplate bands down the mega
-    path; 10000 keeps every bucket on exact all-pairs."""
+    Without exact-content duplicates the two are equal. With them (600
+    files, 475 distinct contents) batch S2 signs one representative per
+    content_sha and links the copies through exact-dup edges, while the
+    delta signs and verifies every new file. So there:
+
+    - the delta pairs contain every batch pair with an endpoint in D;
+    - every extra delta pair has jaccard 1.0 and an endpoint that batch
+      never signed (a non-representative copy);
+    - the components of run_pipeline(B)'s verified pairs and exact-dup
+      edges plus the delta pairs equal the run_pipeline(B u D) clusters.
+
+    max_bucket_pairs=64 sends the boilerplate bands down the mega path;
+    10000 keeps every bucket on exact all-pairs. Mega refinement (batch
+    passes `signed` to S5, the delta does not) makes no difference on
+    this corpus at either value."""
     cfg = replace(PipelineConfig(), max_bucket_pairs=max_bucket_pairs)
-    files = generate_corpus(600, 7).files.drop_duplicates("content")
+    files = generate_corpus(600, 7).files
+    if not exact_dups:
+        files = files.drop_duplicates("content")
     ids = with_file_id(spark.createDataFrame(files))
     in_delta = F.pmod("file_id", F.lit(5)) == 0
-    base = shingle_files(
-        ids.filter(~in_delta), k=cfg.shingle_k, min_freq=cfg.min_token_freq
-    ).select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+    base = shingle_stage(ids.filter(~in_delta), cfg)
     bands = band_files(sign_files(base, cfg), cfg)
     delta = ids.filter(in_delta).select("file_id", "content")
 
@@ -96,16 +117,60 @@ def test_delta_equals_batch(spark, max_bucket_pairs):
     got = triples(incremental_update(delta, base, bands, cfg)["verified_new_pairs"])
     release_all()
     new_ids = ids.filter(in_delta).select("file_id")
-    batch = run_pipeline(spark, spark.createDataFrame(files), cfg)["verified_pairs"]
+    batch = run_pipeline(spark, spark.createDataFrame(files), cfg)
+    pairs = batch["verified_pairs"]
     want = triples(
-        batch.join(new_ids.withColumnRenamed("file_id", "id_a"), "id_a", "left_semi")
+        pairs.join(new_ids.withColumnRenamed("file_id", "id_a"), "id_a", "left_semi")
         .unionByName(
-            batch.join(new_ids.withColumnRenamed("file_id", "id_b"), "id_b", "left_semi")
+            pairs.join(new_ids.withColumnRenamed("file_id", "id_b"), "id_b", "left_semi")
         )
+    )
+    signed = {r.file_id for r in batch["signatures"].select("file_id").collect()}
+    want_clusters = _partition(
+        (r.file_id, r.cluster_id) for r in batch["clusters"].collect()
     )
     release_all()
     assert want, "the split must put verified pairs on the delta side"
-    assert got == want
+    if not exact_dups:
+        assert got == want
+        return
+    assert got > want
+    extra = got - want
+    assert all(j == 1.0 for _, _, j in extra)
+    assert all(a not in signed or b not in signed for a, b, _ in extra)
+
+    base_run = run_pipeline(spark, ids.filter(~in_delta).drop("file_id"), cfg)
+    edges = [
+        (r.id_a, r.id_b)
+        for df in (base_run["verified_pairs"], base_run["exact_dup_edges"])
+        for r in df.select("id_a", "id_b").collect()
+    ] + [(a, b) for a, b, _ in got]
+    nodes = [r.file_id for r in ids.select("file_id").collect()]
+    release_all()
+    assert _partition(_components(nodes, edges)) == want_clusters
+
+
+def _components(nodes, edges):
+    """(node, root) by union-find over `edges`."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    return [(n, find(n)) for n in nodes]
+
+
+def _partition(labels):
+    """{frozenset of members} from (member, label) pairs."""
+    groups = {}
+    for n, c in labels:
+        groups.setdefault(c, set()).add(n)
+    return {frozenset(g) for g in groups.values()}
 
 
 def test_media_feature_extraction_and_dedup(spark):

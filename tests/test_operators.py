@@ -316,7 +316,10 @@ def test_verify_exact_jaccard_and_overlap(spark):
     )
     shingled = shingle_files(docs)
     cands = spark.createDataFrame(pd.DataFrame({"id_a": [1], "id_b": [2]}))
-    row = verify_pairs(cands, shingled, CFG, keep_all=True).first()
+    # an overlap threshold selects the overlap channel (pair_scores_udf)
+    row = verify_pairs(
+        cands, shingled, replace(CFG, overlap_threshold=0.7), keep_all=True
+    ).first()
     assert row.jaccard == pytest.approx(1 / 3)
     assert row.overlap == pytest.approx(1 / 3)
 
@@ -550,15 +553,16 @@ def test_verify_jaccard_probe_matches_jvm_intersect(spark):
         F.sum(F.size(F.filter("shingles", lambda x: x >= 0))).alias("pos"),
     ).first()
     assert signs.neg > 0 and signs.pos > 0
+    overlap_cfg = replace(CFG, overlap_threshold=0.7)  # selects the probe
     probe_rows = (
-        verify_pairs(cands, shingled, CFG, keep_all=True)
+        verify_pairs(cands, shingled, overlap_cfg, keep_all=True)
         .select("id_a", "id_b", "jaccard")
         .toPandas()
         .sort_values(["id_a", "id_b"])
         .reset_index(drop=True)
     )
     jvm_rows = (
-        verify_pairs(cands, shingled, CFG, keep_all=True, compute_overlap=False)
+        verify_pairs(cands, shingled, CFG, keep_all=True)
         .select("id_a", "id_b", "jaccard")
         .toPandas()
         .sort_values(["id_a", "id_b"])

@@ -561,20 +561,17 @@ def test_verify_broadcast_gate_output_identical(spark):
     import dataclasses
 
     from lsh_for_source_code_spark.functions.minhash import sign_files
-    from lsh_for_source_code_spark.functions.tokenize import shingle_files
-    from lsh_for_source_code_spark.operators.banding import band_files
-    from lsh_for_source_code_spark.operators.candidates import candidate_pairs
     from lsh_for_source_code_spark.operators.verify import verify_pairs
-    from lsh_for_source_code_spark.plans.pipeline import with_file_id
+    from lsh_for_source_code_spark.plans.pipeline import (
+        lsh_stages,
+        shingle_stage,
+        with_file_id,
+    )
 
     df, _ = corpus_df(spark, n_files=120, seed=9)
     cfg = PipelineConfig()
-    ids = with_file_id(df)
-    shingled = shingle_files(
-        ids, k=cfg.shingle_k, min_freq=cfg.min_token_freq
-    ).select("file_id", "content_sha", "n_tokens", "shingles", "counts")
-    signed = sign_files(shingled, cfg)
-    cands = candidate_pairs(band_files(signed, cfg), cfg, signed=signed)
+    shingled = shingle_stage(with_file_id(df), cfg)
+    _, cands, _ = lsh_stages(sign_files(shingled, cfg), shingled, cfg)
     results = {}
     for name, c in (
         ("bcast", cfg),

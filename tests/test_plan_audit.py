@@ -245,20 +245,16 @@ def test_delta_path_scans_no_driver_rdd(spark):
     from lsh_for_source_code_spark.caching import release_all
     from lsh_for_source_code_spark.entry_queries import FLAGSHIP_CFG, _docs_as_files
     from lsh_for_source_code_spark.functions.minhash import sign_files
-    from lsh_for_source_code_spark.functions.tokenize import shingle_files
     from lsh_for_source_code_spark.operators.banding import band_files
     from lsh_for_source_code_spark.operators.candidates import candidate_pairs
+    from lsh_for_source_code_spark.plans.pipeline import shingle_stage
     from lsh_for_source_code_spark.streaming.incremental import incremental_update
 
     cfg = FLAGSHIP_CFG
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
         F.col("doc_id") % 5 == 0
     )
-    base = shingle_files(
-        _docs_as_files(docs.filter(F.col("doc_id") % 10 == 5)),
-        k=cfg.shingle_k,
-        min_freq=cfg.min_token_freq,
-    ).select("file_id", "content_sha", "n_tokens", "shingles", "counts")
+    base = shingle_stage(_docs_as_files(docs.filter(F.col("doc_id") % 10 == 5)), cfg)
     bands = band_files(sign_files(base, cfg), cfg)
     delta = _docs_as_files(docs.filter(F.col("doc_id") % 10 == 0))
     for df in (

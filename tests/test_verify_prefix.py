@@ -97,7 +97,7 @@ def test_verify_pairs_identical_with_filter(spark, small_corpus_shingled, theta)
     assert cfg_on.jaccard_threshold >= SOUND_PREFIX_MIN_THETA
 
     def sig(cfg):
-        out = verify_pairs(cands, shingled, cfg, compute_overlap=False)
+        out = verify_pairs(cands, shingled, cfg)
         row = out.agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("id_a", "id_b")).alias("chk"),
@@ -122,17 +122,13 @@ def test_filter_inactive_below_min_theta(spark, small_corpus_shingled):
     )
     marker = "array_intersect(slice("  # unique to the prefix filter
     cfg_lo = dataclasses.replace(cfg, jaccard_threshold=0.4)
-    plan_lo = verify_pairs(
-        cands, shingled, cfg_lo, compute_overlap=False
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert marker not in plan_lo
+    plan_lo = verify_pairs(cands, shingled, cfg_lo)._jdf.queryExecution()
+    assert marker not in plan_lo.optimizedPlan().toString()
 
     for theta in (0.5, 0.9):  # both measured-win regimes
         cfg_hi = dataclasses.replace(cfg, jaccard_threshold=theta)
-        plan_hi = verify_pairs(
-            cands, shingled, cfg_hi, compute_overlap=False
-        )._jdf.queryExecution().optimizedPlan().toString()
-        assert marker in plan_hi
+        plan_hi = verify_pairs(cands, shingled, cfg_hi)._jdf.queryExecution()
+        assert marker in plan_hi.optimizedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -141,20 +137,19 @@ def small_corpus_shingled(spark):
     same generator the bench uses, 600 files)."""
     from lsh_for_source_code_spark.corpus import generate_corpus
     from lsh_for_source_code_spark.functions.minhash import sign_files
-    from lsh_for_source_code_spark.functions.tokenize import shingle_files
-    from lsh_for_source_code_spark.operators.banding import band_files
-    from lsh_for_source_code_spark.operators.candidates import candidate_pairs
-    from lsh_for_source_code_spark.plans.pipeline import with_file_id
+    from lsh_for_source_code_spark.plans.pipeline import (
+        lsh_stages,
+        shingle_stage,
+        with_file_id,
+    )
 
     cfg = PipelineConfig(max_bucket_pairs=1_000_000)
     files = spark.createDataFrame(generate_corpus(600, 23).files).repartition(4)
     ids = with_file_id(files, check_collisions=False)
-    shingled = shingle_files(ids, k=cfg.shingle_k, min_freq=cfg.min_token_freq)[
-        ["file_id", "content_sha", "n_tokens", "shingles", "counts"]
-    ].persist()
+    shingled = shingle_stage(ids, cfg).persist()
     signed = sign_files(shingled, cfg).persist()
-    bands = band_files(signed, cfg)
-    cands = candidate_pairs(bands, cfg, signed=signed).persist()
+    _, cands, _ = lsh_stages(signed, shingled, cfg)
+    cands = cands.persist()
     cands.count()
     yield shingled, cands, cfg
     shingled.unpersist()
