@@ -12,6 +12,9 @@ from pyspark.sql import SparkSession
 
 from lsh_for_source_code_spark.shipping import ensure_shipped, export_pythonpath
 
+# spark.sql.codegen.cache.maxEntries; sized where get_spark sets it
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "lsh-for-source-code-spark",
@@ -58,36 +61,42 @@ def get_spark(
         # capped N->4N efficiency at 0.395. Keep the threshold modest (true
         # dimension tables only); the joins where sorting wide rows hurts
         # pin SHUFFLE_HASH explicitly (parallel per-partition builds).
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(32 * 1024 * 1024)),
-        )
+        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # ANSI off: we rely on permissive casts in a few hash expressions.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # Generated-class cache. Spark keys compiled classes by their source
+        # in an LRU of 100 entries by default, but one operation needs more:
+        # ~150 distinct classes per delta_update or batch_mixed operation,
+        # ~450 per query-roster pass. An LRU cycled over more keys than it
+        # holds never hits, so every repeat re-ran Janino on every stage and
+        # then ran cold, un-JITted classes. One session running run_pipeline,
+        # incremental_update, the perfbench query roster and all 66 declared
+        # queries compiles 1,169 distinct classes (local[4]); 4096 leaves
+        # 3.5x headroom. The conf is static: it applies only when this call
+        # starts the session, not to a session that already runs.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # By default a class's source also names its whole-stage codegen
+        # stage id. AQE numbers the stages it re-plans as their inputs
+        # finish, so a repeat of the same plan could get new ids and miss
+        # the cache (30-44 classes per repeated small delta at local[8]).
+        # Names only; no output changes.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Throughput-oriented GC: this is a batch engine with high allocation
     # rates; JDK17's default G1 runs concurrent cycles that contend with all
     # N worker threads (measured at local[32]: 167s -> 87s wall for the
     # same 200k-file pipeline when switching to ParallelGC).
-    if os.environ.get("SPARK_GRAFT_SHJ"):
-        # experiment knob: prefer shuffled hash join over sort-merge --
-        # parallel per-partition hash build, no sorting of wide array rows,
-        # no driver-side broadcast construction
-        builder = builder.config("spark.sql.join.preferSortMergeJoin", "false")
-    if os.environ.get("SPARK_GRAFT_GC", "parallel") == "parallel":
-        # Cap GC threads at the task parallelism: local[N] on a 32-core host
-        # otherwise gets 32 GC threads regardless of N, so GC wall-time is
-        # constant across parallelism levels and reads as a serial floor in
-        # the N->4N scaling measurement. A real N-core executor has ~N GC
-        # threads; emulate that faithfully.
-        n_gc = None
-        if master.startswith("local[") and master[6:-1].isdigit():
-            n_gc = max(2, int(master[6:-1]))
-        gc_opts = "-XX:+UseParallelGC" + (
-            f" -XX:ParallelGCThreads={n_gc}" if n_gc else ""
-        )
-        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
+    # Cap GC threads at the task parallelism: local[N] on a 32-core host
+    # otherwise gets 32 GC threads regardless of N, so GC wall-time is
+    # constant across parallelism levels and reads as a serial floor in
+    # the N->4N scaling measurement. A real N-core executor has ~N GC
+    # threads; emulate that faithfully.
+    n_gc = None
+    if master.startswith("local[") and master[6:-1].isdigit():
+        n_gc = max(2, int(master[6:-1]))
+    gc_opts = "-XX:+UseParallelGC" + (f" -XX:ParallelGCThreads={n_gc}" if n_gc else "")
+    builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -50,7 +50,8 @@ def test_delta_files_left_anti(spark):
     assert got == {1, 3}
 
 
-def test_incremental_update_finds_cross_batch_pairs(spark):
+def _cross_batch_inputs(spark):
+    """(new, old_shingled, old_bands): file 3 is file 1 plus one token."""
     base_text = " ".join(f"w{i}" for i in range(60))
     old = _files_df(spark, [(1, base_text), (2, "totally other words entirely")])
     old_shingled = shingle_stage(old, CFG)
@@ -59,6 +60,11 @@ def test_incremental_update_finds_cross_batch_pairs(spark):
     new = _files_df(spark, [(3, base_text + " extra")]).select(
         F.col("file_id"), F.col("content")
     )
+    return new, old_shingled, old_bands
+
+
+def test_incremental_update_finds_cross_batch_pairs(spark):
+    new, old_shingled, old_bands = _cross_batch_inputs(spark)
     out = incremental_update(new, old_shingled, old_bands, CFG)
     assert {r.file_id for r in out["delta_shingled"].collect()} == {3}
     # cached, so banding and a caller reading both run the signature UDF once
@@ -67,6 +73,24 @@ def test_incremental_update_finds_cross_batch_pairs(spark):
     assert (1, 3) in pairs
     # old-old pairs are not re-verified
     assert all(3 in p for p in pairs)
+
+
+def test_repeated_delta_compiles_nothing(spark):
+    """A repeated delta reuses every generated class. One delta needs more
+    distinct classes than Spark's default 100-entry codegen LRU holds, so
+    without `session.CODEGEN_CACHE_ENTRIES` every repeat missed on every
+    class and recompiled it (~150 per delta); with stage ids in the class
+    names, AQE's re-planning order still made 30-44 of them miss."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    new, old_shingled, old_bands = _cross_batch_inputs(spark)
+    counts = []
+    for _ in range(2):
+        before = compiles.getCount()
+        incremental_update(new, old_shingled, old_bands, CFG)["verified_new_pairs"].collect()
+        release_all()
+        counts.append(compiles.getCount() - before)
+    assert counts[1] == 0, counts
 
 
 @pytest.mark.parametrize(
