@@ -99,7 +99,8 @@ class PipelineConfig:
     #   C=4:             0.9827 / 0.9845 / 17.8s
     #   C=16 (default):  0.9936 / 0.9978 / 23.7s  <- first >=0.99 everywhere
     #   C=32:            0.9980 / 0.9992 / 34.6s
-    # 0/1 disables (pure star).
+    # Must be >= 2: C=1 (the pure star above) loses 15% of
+    # cross-boilerplate recall.
     # Scale invariant: a mega-bucket member emits <= (C-1) comparisons per
     # band = (C-1)*bands total (960 at defaults) -- BELOW the small-bucket
     # worst case (max_bucket_pairs-1)*bands = 4032 the engine already
@@ -142,9 +143,8 @@ class PipelineConfig:
     # identical verified output (checksum), S6 37.3s -> ~22s. Defaults are
     # deliberately conservative (a 512 MB relation on an 8 GB driver);
     # production corpora blow past the row bound immediately, pay only the
-    # metadata count, and keep the r1-proven SHUFFLE_HASH path (plus
-    # checkpoint_buckets, which removes the feature exchanges entirely on
-    # clusters). <= 0 disables.
+    # metadata count, and keep the r1-proven SHUFFLE_HASH path. <= 0
+    # disables.
 
     verify_sound_prefix_t: int | None = 16
     # SOUND positional prefix filter before the exact per-pair intersect
@@ -172,19 +172,6 @@ class PipelineConfig:
     # None / <= 0 disables.
 
     # --- execution ---
-    checkpoint_buckets: int | None = None
-    # OPT-IN bucketed checkpoint for the shingled-features stage (the
-    # brief's "bucketing for co-located joins"): files_shingled is written
-    # `bucketBy(n, file_id)` as an external datasource table, so BOTH
-    # verify feature joins (side a and side b each rescan the shingle
-    # table -- the two widest scans in the pipeline) read data already
-    # hash-partitioned on the join key and skip their Exchange entirely;
-    # only the narrow candidate-pair side shuffles. At 100 TB the shingle
-    # table is the dominant shuffle payload, so this converts the verify
-    # stage's two wide-array shuffles into zero. Requires a checkpoint_dir
-    # (bucket metadata rides the table catalog; resume re-registers the
-    # external table from the parquet directory). None (default) = plain
-    # parquet checkpoints.
     check_id_collisions: bool = True
     # Audit that the 64-bit xxhash file_id is injective over this corpus's
     # natural keys (repo, path, commit) before anything downstream keys on
@@ -197,8 +184,8 @@ class PipelineConfig:
     simhash_bits: int = 64
     simhash_hamming_max: int = 3
     simhash_max_block: int = 1024
-    # block-table keys with more members than this emit chunked/star
-    # pairs against the min-id anchor instead of all pairs --
+    # block-table keys with more members than this emit chunked pairs
+    # plus chunk-min -> min-id anchor edges instead of all pairs --
     # the same mega-bucket defense as max_bucket_pairs on the MinHash path
     # (a boilerplate-heavy block value would otherwise go O(k^2)).
     simhash_table_blocks: int | None = None
@@ -221,9 +208,9 @@ class PipelineConfig:
             raise ValueError(
                 f"bands*rows ({self.bands}*{self.rows_per_band}) != num_perm ({self.num_perm})"
             )
-        if self.checkpoint_buckets is not None and self.checkpoint_buckets < 1:
+        if self.mega_chunk_target < 2:
             raise ValueError(
-                f"checkpoint_buckets must be >= 1, got {self.checkpoint_buckets}"
+                f"mega_chunk_target must be >= 2, got {self.mega_chunk_target}"
             )
         if not 1 <= self.simhash_bits <= 64:
             # the fingerprint is one 64-bit long (functions/hashing.simhash_concat)
@@ -258,26 +245,3 @@ class PipelineConfig:
 
     def candidate_recall_at(self, s: float) -> float:
         return candidate_probability(s, self.bands, self.rows_per_band)
-
-    @classmethod
-    def cluster_profile(cls, executors: int = 1000, **overrides) -> "PipelineConfig":
-        """The cluster operating point: COST knobs only, so verified output
-        is bit-identical to the default config on the same input (tested).
-        Everything recall-relevant (refinement levels, chunk target,
-        thresholds) stays at the default, recall-proven values.
-
-        - checkpoint_buckets ~= 4 per core (1000 executors x 4 cores ->
-          16k buckets): the shingle checkpoint is written
-          bucketBy(file_id), so the verify stage's two wide
-          feature scans skip their Exchange entirely (measured 4 -> 2
-          exchanges; output bit-identical, tested). On a cluster this
-          removes the pipeline's dominant shuffle payload from the
-          network; single-box it is IO-bound break-even.
-
-        SimHash extreme scale is corpus-dependent, not cluster-dependent:
-        turn on simhash_table_blocks (Manku tables) when the CORPUS grows
-        past ~10^9 docs, regardless of executor count.
-        """
-        return cls(
-            **{"checkpoint_buckets": max(32, 4 * 4 * executors), **overrides}
-        )

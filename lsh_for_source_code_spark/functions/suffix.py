@@ -9,9 +9,9 @@ true suffix array over the concatenated pair, built by numpy prefix
 doubling (O(n log n), fully vectorized -- one lexsort + one cumsum per
 doubling round), with Kasai's O(n) LCP and a cross-string adjacent-pair
 max. Zero collision probability, so it serves as (a) the exactness
-oracle the hash channel is tested against and (b) a selectable
-implementation (make_lcs_containment_udf(impl="suffix_array")) for users
-who need certified-exact containment scores.
+oracle the hash channel is tested against and (b) the scorer of the
+lcs_containment_pairs query (entry_queries.q_lcs_containment_pairs), which
+needs certified-exact containment scores.
 """
 
 from __future__ import annotations

@@ -45,7 +45,7 @@ def _pair_expand(groups: DataFrame, members_col: str = "ms") -> DataFrame:
     entirely via JVM higher-order functions (r6).
 
     Replaces the bucket all-pairs SELF-JOINS: the member lists are BOUNDED
-    (<= max_bucket_pairs for buckets, <= mega_chunk_target for chunks, by
+    (<= max_bucket_pairs for buckets, ~mega_chunk_target for chunks, by
     the filters that feed them), so collect_list is safe, and because each
     feeding aggregation groups by a superset of the upstream join/exchange
     key, the groupBy rides the existing hash partitioning -- no new
@@ -137,11 +137,11 @@ def candidate_pairs(
     # Chunk key = hash(band_key, file_id) mod ceil(sz / C): every member
     # lands in a ~C-sized random chunk, chunks emit exact all-pairs, and the
     # per-chunk minimum connects to the bucket anchor so pre-verify
-    # connectivity of the whole bucket is preserved (the old pure star is
-    # C<=1). Each member gets C-1 exact comparisons per mega band instead of
-    # a single anchor edge -- for borderline-theta members whose anchor edge
-    # passes verify w.p. p, the per-member connection miss rate drops from
-    # (1-p) to (1-p)^C, which is what moves the measured cluster recall
+    # connectivity of the whole bucket is preserved. Each member gets C-1
+    # exact comparisons per mega band instead of a single anchor edge --
+    # for borderline-theta members whose anchor edge passes verify w.p. p,
+    # the per-member connection miss rate drops from (1-p) to (1-p)^C,
+    # which is what moves the measured cluster recall
     # (see config.mega_chunk_target). The chunk hash includes the band key,
     # so different bands chunk the same members differently -- diversity
     # across bands compounds the recall. Measured at 20k, C=16: band-diverse
@@ -191,7 +191,7 @@ def _refine_mega(
     columns (band_id, _key, file_id, sz, anchor)).
     """
     r, p = cfg.rows_per_band, cfg.num_perm
-    C = max(int(cfg.mega_chunk_target), 2)
+    C = int(cfg.mega_chunk_target)
     cap = int(cfg.max_bucket_pairs)
     # ONE-PASS over all levels (a per-level loop of stats+join+self-join was
     # measured ~40s slower at 200k): the cumulative keys k_1..k_L are pure
@@ -281,41 +281,37 @@ def _refine_mega(
 
 
 def _chunked_mega_pairs(mega: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Terminal fallback for buckets still mega after refinement: random
-    ~C-sized chunks emit exact all-pairs + chunk-min -> anchor edges.
-    Input columns: (band_id, _key, file_id, sz, anchor)."""
-    chunk_target = max(int(cfg.mega_chunk_target), 1)
+    """Mega-bucket fallback of both candidate channels: random ~C-sized
+    chunks emit exact all-pairs + chunk-min -> anchor edges. Input columns
+    (band_id, _key, file_id, sz, anchor); the SimHash channel passes its
+    (table_id, key) as (band_id, _key)."""
     n_chunks = F.greatest(
-        F.ceil(F.col("sz") / F.lit(chunk_target)).cast("long"),
+        F.ceil(F.col("sz") / F.lit(int(cfg.mega_chunk_target))).cast("long"),
         F.lit(1).cast("long"),
     )
     mega_c = mega.withColumn(
         "_chunk", F.pmod(F.xxhash64("band_id", "_key", "file_id"), n_chunks)
     ).select("band_id", "_key", "_chunk", "file_id", "anchor")
-    if chunk_target > 1:
-        # ONE aggregation yields both the bounded member lists (chunk
-        # all-pairs via _pair_expand, lists <= chunk_target by the chunk
-        # key) and the chunk-min/anchor columns for the connectivity edges;
-        # persisted because both consumers read it, and the former shape
-        # (self-join + separate min aggregation) recomputed the residual's
-        # filter+join chain three times (r6: ~4s of pure recompute at 200k).
-        chunk_groups = track(
-            mega_c.groupBy("band_id", "_key", "_chunk")
-            .agg(
-                F.collect_list("file_id").alias("ms"),
-                F.min("file_id").alias("_cmin"),
-                F.min("anchor").alias("_anchor"),
-            )
-            .persist()
+    # ONE aggregation yields both the bounded member lists (chunk all-pairs
+    # via _pair_expand, lists ~C long by the chunk key) and the
+    # chunk-min/anchor columns for the connectivity edges; persisted because
+    # both consumers read it, and the former shape (self-join + separate min
+    # aggregation) recomputed the residual's filter+join chain three times
+    # (r6: ~4s of pure recompute at 200k).
+    chunk_groups = track(
+        mega_c.groupBy("band_id", "_key", "_chunk")
+        .agg(
+            F.collect_list("file_id").alias("ms"),
+            F.min("file_id").alias("_cmin"),
+            F.min("anchor").alias("_anchor"),
         )
-        chunk_pairs = _pair_expand(chunk_groups)
-        anchor_edges = chunk_groups.filter(
-            F.col("_cmin") != F.col("_anchor")
-        ).select(F.col("_anchor").alias("id_a"), F.col("_cmin").alias("id_b"))
-        return chunk_pairs.unionByName(anchor_edges)
-    return mega.filter(F.col("file_id") != F.col("anchor")).select(
-        F.col("anchor").alias("id_a"), F.col("file_id").alias("id_b")
+        .persist()
     )
+    chunk_pairs = _pair_expand(chunk_groups)
+    anchor_edges = chunk_groups.filter(
+        F.col("_cmin") != F.col("_anchor")
+    ).select(F.col("_anchor").alias("id_a"), F.col("_cmin").alias("id_b"))
+    return chunk_pairs.unionByName(anchor_edges)
 
 
 def _sim_self_join(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -355,10 +351,10 @@ def simhash_candidate_pairs(signed: DataFrame, cfg: PipelineConfig) -> DataFrame
 
     Skew defense (VERDICT r1 wrong#2), as in candidate_pairs: occupancy +
     anchor come from one map-side-combined aggregation, keys with <=
-    cfg.simhash_max_block members emit exact all-pairs, mega keys use the
-    random chunked topology (r2 ADVICE: each member gets C-1 direct
-    comparisons plus a chunk-min -> anchor connectivity edge; C <= 1 is the
-    pure min-id star). All emitted pairs pass the hamming filter, so the
+    cfg.simhash_max_block members emit exact all-pairs, mega keys go
+    through the same chunked fallback (_chunked_mega_pairs; r2 ADVICE: each
+    member gets C-1 direct comparisons plus a chunk-min -> anchor
+    connectivity edge). All emitted pairs pass the hamming filter, so the
     output contract (hamming <= t) holds on every path."""
     t = cfg.simhash_hamming_max
     m = cfg.simhash_table_blocks or t + 1
@@ -398,53 +394,26 @@ def simhash_candidate_pairs(signed: DataFrame, cfg: PipelineConfig) -> DataFrame
         KEY,
     )
 
-    # mega keys: random chunked topology (mirrors candidate_pairs). The
-    # anchor's own row is guaranteed present under its key, so the
-    # (anchor, anchor_sim) lookup joins back linearly -- never a self-join
-    # on the hot key.
-    mega = tagged.filter(F.col("sz") > cfg.simhash_max_block)
-    anchors = (
-        mega.filter(F.col("file_id") == F.col("anchor"))
-        .select(*KEY, "anchor", F.col("simhash").alias("anchor_sim"))
-        .dropDuplicates(KEY)
+    # mega keys: the chunked fallback candidate_pairs uses, then both
+    # fingerprints joined onto the emitted (linear-size) pair set.
+    pairs_mega = _chunked_mega_pairs(
+        tagged.filter(F.col("sz") > cfg.simhash_max_block).select(
+            F.col("table_id").alias("band_id"),
+            F.col("key").alias("_key"),
+            "file_id",
+            "sz",
+            "anchor",
+        ),
+        cfg,
     )
-    chunk_target = max(int(cfg.mega_chunk_target), 1)
-    if chunk_target > 1:
-        n_chunks = F.greatest(
-            F.ceil(F.col("sz") / F.lit(chunk_target)).cast("long"),
-            F.lit(1).cast("long"),
-        )
-        mega_c = mega.withColumn(
-            "_chunk", F.pmod(F.xxhash64(*KEY, "file_id"), n_chunks)
-        ).select(*KEY, "_chunk", "file_id", "simhash")
-        anchor_edges = (
-            mega_c.groupBy(*KEY, "_chunk")
-            .agg(
-                F.min("file_id").alias("_cmin"),
-                F.min_by("simhash", "file_id").alias("_cmin_sim"),
-            )
-            .join(anchors, on=KEY)
-            .filter(F.col("_cmin") != F.col("anchor"))
-            .select(
-                F.col("anchor").alias("id_a"),
-                F.col("_cmin").alias("id_b"),
-                F.col("anchor_sim").alias("sim_a"),
-                F.col("_cmin_sim").alias("sim_b"),
-            )
-        )
-        pairs_mega = _sim_self_join(mega_c, [*KEY, "_chunk"]).unionByName(
-            anchor_edges
-        )
-    else:
-        pairs_mega = (
-            mega.filter(F.col("file_id") != F.col("anchor"))
-            .join(anchors.drop("anchor"), on=KEY)
-            .select(
-                F.col("anchor").alias("id_a"),
-                F.col("file_id").alias("id_b"),
-                F.col("anchor_sim").alias("sim_a"),
-                F.col("simhash").alias("sim_b"),
-            )
+    fp = df.select("file_id", "simhash")
+    for side in ("a", "b"):
+        pairs_mega = pairs_mega.join(
+            fp.select(
+                F.col("file_id").alias(f"id_{side}"),
+                F.col("simhash").alias(f"sim_{side}"),
+            ),
+            f"id_{side}",
         )
     return (
         pairs_small.unionByName(pairs_mega)

@@ -304,9 +304,7 @@ def _batched_lcs_search(entries: list) -> dict[int, int]:
     return result
 
 
-def make_lcs_containment_udf(
-    min_containment: float | None = None, impl: str = "hash"
-):
+def make_lcs_containment_udf(min_containment: float | None = None):
     """Longest-common-substring containment: lcs_len / min(len_a, len_b).
 
     Suffix-structure channel for containment dups (north_star; no reference
@@ -333,41 +331,13 @@ def make_lcs_containment_udf(
     np.intersect1d probes; hub docs' window keys are memoized per round.
     Result is bisection-identical to the per-pair search.
 
-    impl="suffix_array" switches to the DETERMINISTIC exact path
-    (functions/suffix.py: prefix-doubling suffix array + Kasai LCP over
-    the separator-joined pair) -- the north-star's "suffix-array-based"
-    check with zero hash-collision probability. Measured ~2.5x slower
-    than the hash bisection at 8KB docs, so the Monte-Carlo hash path
-    (collision odds ~2^-62 per probe) stays the default; the gate probe
-    is skipped under this impl because the gate itself is hash-based."""
-    if impl not in ("hash", "suffix_array"):
-        raise ValueError(f"unknown LCS impl {impl!r}")
-
-    def _sa_batch(content_a, content_b) -> np.ndarray:
-        from lsh_for_source_code_spark.functions.suffix import lcs_len_suffix_array
-
-        out = np.zeros(len(content_a), dtype=np.float64)
-        codes: dict[str, np.ndarray] = {}
-
-        def of(s: str) -> np.ndarray:
-            c = codes.get(s)
-            if c is None:
-                c = codes[s] = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
-            return c
-
-        for i, (a, b) in enumerate(zip(content_a, content_b)):
-            if not a or not b:
-                continue
-            ca, cb = of(a), of(b)
-            m = min(len(ca), len(cb))
-            if m == 0:
-                continue
-            out[i] = lcs_len_suffix_array(ca, cb) / m
-        return out
+    The DETERMINISTIC counterpart is functions/suffix.lcs_len_suffix_array
+    (prefix-doubling suffix array + Kasai LCP, zero hash-collision
+    probability): measured ~2.5x slower than this hash bisection at 8KB
+    docs (collision odds ~2^-62 per probe), it serves as the exactness
+    oracle in tests and as the lcs_containment_pairs query's scorer."""
 
     def _batch(content_a, content_b) -> np.ndarray:
-        if impl == "suffix_array":
-            return _sa_batch(content_a, content_b)
         out = np.zeros(len(content_a), dtype=np.float64)
         hashers: dict[str, "_RollingHasher"] = {}
 
@@ -457,7 +427,6 @@ def feature_table_fits_broadcast(
 def join_pair_features(
     candidates: DataFrame,
     shingled: DataFrame,
-    id_col: str = "file_id",
     with_counts: bool = True,
     broadcast_b: bool = False,
 ) -> DataFrame:
@@ -488,7 +457,7 @@ def join_pair_features(
     and the candidates stream never shuffles at all -- verify wall
     17.2-24.9s -> 14.4-20.0s, winning 6/7 interleaved reps, output
     identical by count + xxhash64 checksum."""
-    cols = [F.col(id_col).alias("fid"), F.col("shingles")]
+    cols = [F.col("file_id").alias("fid"), F.col("shingles")]
     if with_counts:
         cols += [F.col("counts"), F.col("n_tokens")]
     feat = shingled.select(*cols)
@@ -562,7 +531,6 @@ def verify_pairs(
     candidates: DataFrame,
     shingled: DataFrame,
     cfg: PipelineConfig,
-    id_col: str = "file_id",
     keep_all: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, jaccard, overlap [, n_shared_bands]) for pairs passing
@@ -590,7 +558,6 @@ def verify_pairs(
     joined = join_pair_features(
         candidates,
         shingled,
-        id_col,
         with_counts=with_overlap,
         broadcast_b=feature_table_fits_broadcast(
             shingled, cfg, with_counts=with_overlap
@@ -648,17 +615,14 @@ def verify_pairs(
 
 
 def add_lcs_containment(
-    pairs: DataFrame, files: DataFrame, id_col: str = "file_id",
-    content_col: str = "content", min_containment: float | None = None,
-    impl: str = "hash",
+    pairs: DataFrame, files: DataFrame, min_containment: float | None = None
 ) -> DataFrame:
-    """Containment channel: join content back (only for the surviving pairs
-    -- a tiny fraction of the corpus) and score LCS containment. Pass the
-    downstream filter threshold as `min_containment` to enable the cheap
-    gate probe; impl="suffix_array" selects the certified-exact suffix-
-    array path (see make_lcs_containment_udf)."""
-    udf = make_lcs_containment_udf(min_containment, impl=impl)
-    c = files.select(F.col(id_col).alias("fid"), F.col(content_col).alias("c"))
+    """Containment channel: join `files.content` back (only for the
+    surviving pairs -- a tiny fraction of the corpus) and score LCS
+    containment. Pass the downstream filter threshold as `min_containment`
+    to enable the cheap gate probe (see make_lcs_containment_udf)."""
+    udf = make_lcs_containment_udf(min_containment)
+    c = files.select(F.col("file_id").alias("fid"), F.col("content").alias("c"))
     a = c.select(F.col("fid").alias("id_a"), F.col("c").alias("content_a"))
     b = c.select(F.col("fid").alias("id_b"), F.col("c").alias("content_b"))
     return (

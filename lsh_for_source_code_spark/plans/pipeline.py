@@ -54,140 +54,41 @@ class CheckpointStore:
             os.path.join(self._path(name), "_SUCCESS")
         )
 
-    def _table_name(self, name: str) -> str:
-        import hashlib
-
-        h = hashlib.md5(self.root.encode()).hexdigest()[:10]
-        return f"ckpt_{h}_{name}"
-
-    def _bucket_marker_path(self, name: str) -> str:
-        return os.path.join(self._path(name), "_BUCKET_SPEC.json")
-
-    def _write_bucket_marker(self, name: str, bucket: tuple) -> None:
-        """Persist the bucket layout (cols, n) next to _SUCCESS. Registering
-        a bucketed table over parquet asserts a hash partitioning Spark then
-        TRUSTS without checking -- if a resume's requested spec differs from
-        what the files were actually written with, downstream joins would
-        silently skip a required Exchange and produce wrong results (ADVICE
-        r4). The marker makes the layout self-describing so resume can
-        validate instead of trusting the caller's current config."""
-        import json
-
-        cols, n = bucket
-        with open(self._bucket_marker_path(name), "w") as f:
-            json.dump({"cols": list(cols), "buckets": int(n)}, f)
-
-    def _read_bucket_marker(self, name: str) -> tuple | None:
-        import json
-
-        p = self._bucket_marker_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            d = json.load(f)
-        return (tuple(d["cols"]), int(d["buckets"]))
-
-    def _register_bucketed(self, name: str, bucket: tuple) -> str:
-        """(Re-)register the external bucketed table over an existing
-        checkpoint directory -- bucket METADATA lives in the session
-        catalog, so a resume from a fresh session must rebuild it before
-        the scan can report its hash partitioning."""
-        cols, n = bucket
-        tbl = self._table_name(name)
-        if not self.spark.catalog.tableExists(tbl):
-            schema = self.spark.read.parquet(self._path(name)).schema
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY ({', '.join(cols)}) INTO {int(n)} BUCKETS "
-                f"LOCATION '{self._path(name)}'"
-            )
-        return tbl
-
-    def materialize(
-        self, name: str, df: DataFrame, bucket: tuple | None = None
-    ) -> DataFrame:
+    def materialize(self, name: str, df: DataFrame, _unused=None) -> DataFrame:
         """Write-once + read-back; stage output becomes a scan (lineage cut,
         resume point). Without a root, stages are persisted instead so
         multi-consumer stages (shingled feeds S2 + the verify join; verified
         feeds the cluster edges and metrics) compute once, not per action.
 
-        `bucket=((col, ...), n)` writes the stage `bucketBy(n, cols)` as an
-        external datasource table: downstream equi-joins on the bucket
-        columns read it pre-hash-partitioned and skip their Exchange (see
-        PipelineConfig.checkpoint_buckets)."""
+        `_unused` keeps the 4-argument call of perfbench's traced wrapper
+        (perfbench/workloads.py) working; nothing reads it."""
         if not self.root:
             from lsh_for_source_code_spark.caching import track
 
             return track(df.persist(StorageLevel.MEMORY_AND_DISK))
-        t0 = time.monotonic()
-        if not self.has(name):
-            if bucket is not None:
-                cols, n = bucket
-                tbl = self._table_name(name)
-                if self.spark.catalog.tableExists(tbl):
-                    self.spark.sql(f"DROP TABLE {tbl}")
-                (
-                    # repartition on the bucket key first so each write task
-                    # owns exactly one bucket -- without it every task
-                    # sprays a file into all n buckets (n x file-count
-                    # write amplification, measured 1.3-1.7x slower
-                    # single-box at n=128)
-                    df.repartition(int(n), *[F.col(c) for c in cols])
-                    .write.mode("overwrite")
-                    .option("path", self._path(name))
-                    .bucketBy(int(n), *cols)
-                    .saveAsTable(tbl)
-                )
-                self._write_bucket_marker(name, bucket)
-                out = self.spark.table(tbl)
-            else:
-                df.write.mode("overwrite").parquet(self._path(name))
-                out = self.spark.read.parquet(self._path(name))
-            from lsh_for_source_code_spark.plans.metrics import partition_stats
-
-            pstats = partition_stats(out)
-            pstats.write.mode("overwrite").parquet(self._path(name + "__partitions"))
-            rows = int(
-                self.spark.read.parquet(self._path(name + "__partitions"))
-                .groupBy()
-                .sum("rows")
-                .first()[0]
-                or 0
-            )
-            wall = time.monotonic() - t0
-            self.log.append({"stage": name, "action": "computed", "wall_s": wall})
-            self.metrics.record(name, "computed", rows=rows, wall_s=round(wall, 3))
-            return out
-        if bucket is not None:
-            cols, n = bucket
-            stored = self._read_bucket_marker(name)
-            if stored != (tuple(cols), int(n)):
-                # checkpoint was written unbucketed (no marker) or with a
-                # different layout than this run requests: a plain parquet
-                # scan is always correct (it just shuffles); registering the
-                # mismatched spec would silently corrupt downstream joins
-                self.log.append(
-                    {
-                        "stage": name,
-                        "action": "resumed_unbucketed",
-                        "wall_s": 0.0,
-                        "requested": [list(cols), int(n)],
-                        "stored": None if stored is None else [
-                            list(stored[0]), stored[1]
-                        ],
-                    }
-                )
-                self.metrics.record(name, "resumed_unbucketed")
-                return self.spark.read.parquet(self._path(name))
+        if self.has(name):
             self.log.append({"stage": name, "action": "resumed", "wall_s": 0.0})
             self.metrics.record(name, "resumed")
-            return self.spark.table(self._register_bucketed(name, bucket))
-        self.log.append({"stage": name, "action": "resumed", "wall_s": 0.0})
-        self.metrics.record(name, "resumed")
-        return self.spark.read.parquet(self._path(name))
+            return self.spark.read.parquet(self._path(name))
+        from lsh_for_source_code_spark.plans.metrics import partition_stats
+
+        t0 = time.monotonic()
+        df.write.mode("overwrite").parquet(self._path(name))
+        out = self.spark.read.parquet(self._path(name))
+        partition_stats(out).write.mode("overwrite").parquet(
+            self._path(name + "__partitions")
+        )
+        rows = int(
+            self.spark.read.parquet(self._path(name + "__partitions"))
+            .groupBy()
+            .sum("rows")
+            .first()[0]
+            or 0
+        )
+        wall = time.monotonic() - t0
+        self.log.append({"stage": name, "action": "computed", "wall_s": wall})
+        self.metrics.record(name, "computed", rows=rows, wall_s=round(wall, 3))
+        return out
 
     def finish(self):
         if self.root:
@@ -288,15 +189,7 @@ def run_pipeline(
     ids = with_file_id(code_files, check_collisions=cfg.check_id_collisions)
 
     # S1: shingle + sha.
-    shingled = store.materialize(
-        "files_shingled",
-        shingle_stage(ids, cfg),
-        bucket=(
-            (("file_id",), cfg.checkpoint_buckets)
-            if cfg.checkpoint_buckets and checkpoint_dir
-            else None
-        ),
-    )
+    shingled = store.materialize("files_shingled", shingle_stage(ids, cfg))
 
     # S2: exact-dup short-circuit. reps carry min(file_id) per content_sha.
     sha_groups = shingled.groupBy("content_sha").agg(

@@ -326,8 +326,10 @@ def test_lcs_suffix_array_matches_dp_and_hash(a, b):
 
 
 def test_lcs_udf_impls_agree():
-    """make_lcs_containment_udf(impl="suffix_array") must score every pair
-    identically to the default hash path (plain-batch hook, no Spark)."""
+    """The hash LCS containment UDF must score every pair identically to
+    the exact suffix-array LCS over min(len) (plain-batch hook, no
+    Spark)."""
+    from lsh_for_source_code_spark.functions.suffix import lcs_len_suffix_array
     from lsh_for_source_code_spark.operators.verify import make_lcs_containment_udf
 
     rng = np.random.default_rng(11)
@@ -340,7 +342,10 @@ def test_lcs_udf_impls_agree():
     pairs_a += ["", "abc"]
     pairs_b += ["xyz", ""]
     hash_scores = make_lcs_containment_udf(None)._plain_batch(pairs_a, pairs_b)
-    sa_scores = make_lcs_containment_udf(None, impl="suffix_array")._plain_batch(
-        pairs_a, pairs_b
-    )
+    sa_scores = np.zeros(len(pairs_a))
+    for i, (a, b) in enumerate(zip(pairs_a, pairs_b)):
+        ca = np.frombuffer(a.encode("utf-8"), dtype=np.uint8)
+        cb = np.frombuffer(b.encode("utf-8"), dtype=np.uint8)
+        if min(len(ca), len(cb)):
+            sa_scores[i] = lcs_len_suffix_array(ca, cb) / min(len(ca), len(cb))
     assert np.allclose(hash_scores, sa_scores, atol=0)

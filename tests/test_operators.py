@@ -99,21 +99,6 @@ def test_candidates_small_bucket_all_pairs(spark):
     assert got == {(1, 2), (1, 3), (2, 3), (10, 11)}
 
 
-def test_candidates_mega_bucket_star_topology(spark):
-    """mega_chunk_target=1 degrades to the pure star (r1/r2 behavior)."""
-    n = 20  # > max_bucket_pairs=4
-    bands = spark.createDataFrame(
-        pd.DataFrame(
-            {"file_id": range(n), "band_id": [0] * n, "band_hash": [7] * n}
-        )
-    )
-    cfg = replace(CFG, mega_chunk_target=1)
-    rows = candidate_pairs(bands, cfg).collect()
-    # linear, not quadratic: n-1 star edges from the min-id anchor
-    assert len(rows) == n - 1
-    assert all(r.id_a == 0 for r in rows)
-
-
 def test_candidates_mega_bucket_chunked_topology(spark):
     """Default mega path: random ~C-sized chunks emit exact all-pairs plus
     chunk-min -> anchor edges. Invariants: (a) linear work -- far below the
@@ -252,7 +237,7 @@ def test_refine_union_join_equals_two_join_reference(spark):
     # itself (python has no xxhash64 twin), then apply the emission
     # policy in plain python
     r_, p_ = cfg.rows_per_band, cfg.num_perm
-    C = max(int(cfg.mega_chunk_target), 2)
+    C = int(cfg.mega_chunk_target)
     cap = int(cfg.max_bucket_pairs)
     key_cols = []
     k = F.lit(7).cast("long")
@@ -455,21 +440,21 @@ def test_simhash_candidates_find_near_identical(spark):
 @pytest.mark.parametrize("table_blocks", [None, 8])
 def test_simhash_mega_block_star_topology(spark, table_blocks):
     """A hot key (here: identical fingerprints, so every single-block key
-    and every 5-of-8 combination key is hot) must emit O(n) star pairs,
-    not O(n^2) (VERDICT r1 wrong#2). mega_chunk_target=1 degrades to the
-    pure star."""
+    and every 5-of-8 combination key is hot) must emit O(n) pairs, not
+    O(n^2) (VERDICT r1 wrong#2), even at the smallest chunk target C=2,
+    where each member gets about one chunk partner plus the chunk-min ->
+    anchor edges."""
     n = 30
     cfg = PipelineConfig(
         num_perm=16, bands=8, rows_per_band=2, simhash_max_block=8,
-        mega_chunk_target=1, simhash_table_blocks=table_blocks,
+        mega_chunk_target=2, simhash_table_blocks=table_blocks,
     )
     signed = spark.createDataFrame(
         pd.DataFrame({"file_id": range(n), "simhash": [0x1234] * n})
     )
     rows = simhash_candidate_pairs(signed, cfg).collect()
-    # hamming(identical)=0 <= t, star topology: n-1 anchor edges only
-    assert len(rows) == n - 1
-    assert all(r.id_a == 0 and r.hamming == 0 for r in rows)
+    assert all(r.hamming == 0 for r in rows)
+    assert n - 1 <= len(rows) < n * (n - 1) // 2
 
 
 def test_simhash_mega_block_chunked_recall(spark):

@@ -414,27 +414,6 @@ def test_run_pipeline_runs_collision_audit_by_default(spark, monkeypatch):
     assert "clusters" in out
 
 
-def test_cluster_profile_output_identical_to_default(spark):
-    """PipelineConfig.cluster_profile() changes COST knobs only (bucketed
-    checkpoints) -- verified pairs and clusters must be bit-identical to
-    the default config on the same input, so switching profiles between a
-    laptop run and a 1000-executor run can never change results.
-    executors=1 keeps the bucket count test-sized."""
-    prof = PipelineConfig.cluster_profile(executors=1)
-    assert prof.checkpoint_buckets == 32
-    assert prof.jaccard_threshold == CFG.jaccard_threshold
-    assert prof.mega_refine_levels == CFG.mega_refine_levels
-    df, _ = corpus_df(spark, n_files=120, seed=9)
-    base = run_pipeline(spark, df, PipelineConfig())
-    base_pairs = {(r.id_a, r.id_b) for r in base["verified_pairs"].collect()}
-    got = run_pipeline(spark, df, prof)
-    got_pairs = {(r.id_a, r.id_b) for r in got["verified_pairs"].collect()}
-    assert len(base_pairs) > 0
-    assert got_pairs == base_pairs
-    # 1000-executor shape is structurally valid too (no pipeline run)
-    assert PipelineConfig.cluster_profile().checkpoint_buckets == 16000
-
-
 def test_lcs_hybrid_search_matches_per_pair_across_crossover():
     """The r4 hybrid exact-LCS search (batched bisection below
     _LCS_BATCH_SEARCH_MAX_BYTES combined size, per-pair numpy probes
@@ -482,67 +461,6 @@ def test_lcs_hybrid_search_matches_per_pair_across_crossover():
         assert np.allclose(got, ref), mc
 
 
-def test_bucketed_checkpoint_equivalence_and_plan(spark, tmp_path):
-    """cfg.checkpoint_buckets: (1) the bucketed pipeline's verified pairs
-    and clusters are identical to the plain run; (2) the verify feature
-    join over the bucketed shingle table reads BOTH wide sides as bucketed
-    scans and drops their Exchanges (4 -> 2; only the narrow candidate
-    side still shuffles -- the whole point at 100 TB, where the shingle
-    table dominates shuffle bytes); (3) a resume with the table metadata
-    gone (fresh-session simulation) re-registers the external bucketed
-    table and reproduces the result."""
-    from lsh_for_source_code_spark.operators.verify import verify_pairs
-    from lsh_for_source_code_spark.plans.pipeline import run_pipeline
-
-    df, _ = corpus_df(spark, n_files=80, seed=3)
-    plain_cfg = PipelineConfig()
-    buck_cfg = PipelineConfig(checkpoint_buckets=4)
-
-    out_p = run_pipeline(spark, df, plain_cfg, checkpoint_dir=str(tmp_path / "p"))
-    out_b = run_pipeline(spark, df, buck_cfg, checkpoint_dir=str(tmp_path / "b"))
-    pairs_p = {(r.id_a, r.id_b) for r in out_p["verified_pairs"].collect()}
-    pairs_b = {(r.id_a, r.id_b) for r in out_b["verified_pairs"].collect()}
-    assert pairs_p == pairs_b and pairs_p
-    clus_p = {(r.file_id, r.cluster_id) for r in out_p["clusters"].collect()}
-    clus_b = {(r.file_id, r.cluster_id) for r in out_b["clusters"].collect()}
-    assert clus_p == clus_b
-
-    # plan shape: rebuild the verify join against each stored shingle stage.
-    # The r6 size-adaptive b-side broadcast would also elide an exchange at
-    # this corpus size -- pin it OFF so the assertion isolates the BUCKET
-    # mechanism (its own gate is covered by test_plan_audit).
-    import dataclasses
-
-    nobc_cfg = dataclasses.replace(buck_cfg, verify_broadcast_max_rows=0)
-    cands = out_b["candidate_pairs"].select("id_a", "id_b", "n_shared_bands")
-    plain_sh = spark.read.parquet(str(tmp_path / "b" / "files_shingled"))
-    for src, want_bucketed in ((plain_sh, False), (out_b["files_shingled"], True)):
-        v = verify_pairs(cands, plain_sh if not want_bucketed else src, nobc_cfg)
-        v.count()
-        plan = v._jdf.queryExecution().executedPlan().toString()
-        n_ex = plan.count("Exchange hashpartitioning")
-        n_bk = plan.count("Bucketed: true")
-        if want_bucketed:
-            assert n_bk == 2 and n_ex == 2, plan[:2000]
-        else:
-            assert n_bk == 0 and n_ex == 4, plan[:2000]
-
-    # fresh-session resume: drop catalog metadata, keep files
-    for t in spark.catalog.listTables():
-        if t.name.startswith("ckpt_"):
-            spark.sql(f"DROP TABLE {t.name}")
-    out_r = run_pipeline(spark, df, buck_cfg, checkpoint_dir=str(tmp_path / "b"))
-    actions = {e["stage"]: e["action"] for e in out_r["_store"].log}
-    assert actions["files_shingled"] == "resumed"
-    clus_r = {(r.file_id, r.cluster_id) for r in out_r["clusters"].collect()}
-    assert clus_r == clus_p
-
-
-def test_config_rejects_bad_checkpoint_buckets():
-    with pytest.raises(ValueError):
-        PipelineConfig(checkpoint_buckets=0)
-
-
 def test_config_rejects_bad_simhash_layout():
     # the fingerprint is one 64-bit long: wider layouts must fail loudly
     with pytest.raises(ValueError):
@@ -550,6 +468,9 @@ def test_config_rejects_bad_simhash_layout():
     # pigeonhole needs more blocks than differing bits
     with pytest.raises(ValueError):
         PipelineConfig(simhash_table_blocks=3, simhash_hamming_max=3)
+    # a mega-bucket chunk needs at least two members
+    with pytest.raises(ValueError):
+        PipelineConfig(mega_chunk_target=1)
 
 
 def test_verify_broadcast_gate_output_identical(spark):
@@ -600,41 +521,3 @@ def test_pipeline_survives_ansi_mode(spark):
         assert got == expect and got
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "false")
-
-def test_bucketed_checkpoint_spec_mismatch_falls_back_to_plain_scan(spark, tmp_path):
-    """ADVICE r4: resume must not trust the caller's CURRENT bucket spec.
-    If the checkpoint was written with a different (cols, n) -- or without
-    bucketing at all -- registering the requested spec would make Spark
-    assume a hash partitioning the files don't have and silently corrupt
-    downstream joins. The store persists a _BUCKET_SPEC.json marker at
-    write time and falls back to a plain parquet scan on any mismatch."""
-    from lsh_for_source_code_spark.plans.pipeline import run_pipeline
-
-    df, _ = corpus_df(spark, n_files=60, seed=5)
-    ckpt = str(tmp_path / "ck")
-    out_w = run_pipeline(
-        spark, df, PipelineConfig(checkpoint_buckets=4), checkpoint_dir=ckpt
-    )
-    clus_w = {(r.file_id, r.cluster_id) for r in out_w["clusters"].collect()}
-
-    # drop catalog metadata to simulate a fresh session, then resume with a
-    # DIFFERENT bucket count
-    for t in spark.catalog.listTables():
-        if t.name.startswith("ckpt_"):
-            spark.sql(f"DROP TABLE {t.name}")
-    out_r = run_pipeline(
-        spark, df, PipelineConfig(checkpoint_buckets=8), checkpoint_dir=ckpt
-    )
-    actions = {e["stage"]: e["action"] for e in out_r["_store"].log}
-    assert actions["files_shingled"] == "resumed_unbucketed"
-    clus_r = {(r.file_id, r.cluster_id) for r in out_r["clusters"].collect()}
-    assert clus_r == clus_w  # plain scan: correct results, just re-shuffles
-
-    # marker deleted (e.g. dir written by an unbucketed writer): same fallback
-    import os
-    os.remove(os.path.join(ckpt, "files_shingled", "_BUCKET_SPEC.json"))
-    out_n = run_pipeline(
-        spark, df, PipelineConfig(checkpoint_buckets=4), checkpoint_dir=ckpt
-    )
-    actions_n = {e["stage"]: e["action"] for e in out_n["_store"].log}
-    assert actions_n["files_shingled"] == "resumed_unbucketed"
