@@ -128,59 +128,8 @@ class PipelineConfig:
     # level 2 on) reaches type2 0.945 / family-stratum 0.9913 at 143s
     # pipeline wall (L=3: 0.927/0.9886 at 108s; emit-cap only at the last
     # level: 0.883/0.9816 at 100s). 0 disables.
-    verify_broadcast_max_rows: int = 4_000_000
-    verify_broadcast_max_bytes: int = 512 * 1024 * 1024
-    # Size-adaptive b-side broadcast for the verify feature join (r6, guide
-    # §8 "broadcast the plan"): the expensive exchange in S6 is the join-1
-    # output -- every candidate pair already carrying its sh_a array --
-    # being re-shuffled by id_b (~|pairs| x avg-array bytes; ~32 GB at the
-    # 200k bench). When the FEATURE table (one row per distinct content,
-    # NOT per pair) fits under both bounds, the b-side join broadcasts and
-    # that wide intermediate never crosses an exchange. Decision cost is
-    # one count() (parquet-metadata / cached) and, only under the row
-    # bound, one size aggregate over the small table
-    # (verify.feature_table_fits_broadcast). Measured at 200k/local[32]:
-    # identical verified output (checksum), S6 37.3s -> ~22s. Defaults are
-    # deliberately conservative (a 512 MB relation on an 8 GB driver);
-    # production corpora blow past the row bound immediately, pay only the
-    # metadata count, and keep the r1-proven SHUFFLE_HASH path. <= 0
-    # disables.
 
-    verify_sound_prefix_t: int | None = 16
-    # SOUND positional prefix filter before the exact per-pair intersect
-    # (r6; PPJoin t-occurrence lemma, Xiao et al. WWW'08): with both
-    # shingle arrays sorted by the same global order (they are -- the
-    # shingle UDF emits sorted-distinct hashes), jaccard(A,B) >= theta
-    # implies |A n B| >= alpha = theta/(1+theta)*(|A|+|B|), and then the
-    # (|A|-alpha+t)-prefixes of A and B must share >= t elements. Pairs
-    # failing that prefix check have jaccard < theta with CERTAINTY, so the
-    # filter is exact: verified output is byte-identical (checksum-asserted
-    # A/B + property test). Cost: an array_intersect over ~((1-theta)/
-    # (1+theta))*n + t element prefixes on every pair buys skipping the
-    # full-array intersect (and all downstream row machinery) on rejected
-    # pairs. Measured at 200k/local[32], t=16, identical outputs
-    # (OPTIMIZATION_r06.md "S6 verify: SOUND positional prefix filter"):
-    # theta=0.9 flagship query 5.6s -> 4.2s
-    # (prefix ~0.053n+t rejects everything below j~0.68); theta=0.5
-    # pipeline verify warm 24.7-28.0s -> 15.2-22.5s -- the junk
-    # distribution (72% of the 17.2M candidates at j in [0.10,0.30),
-    # same section) sits far enough below the n/3+t
-    # certificate, and rejected pairs skip the full hash-set build, so the
-    # filter beats the naive (p/n)-cost model even at theta=0.5. The
-    # operator applies it for jaccard_threshold >= 0.5 (below that the
-    # sound prefix exceeds half the array; no declared query goes there).
-    # None / <= 0 disables.
-
-    # --- execution ---
-    check_id_collisions: bool = True
-    # Audit that the 64-bit xxhash file_id is injective over this corpus's
-    # natural keys (repo, path, commit) before anything downstream keys on
-    # it -- birthday collisions are near-certain at ~2^32 distinct keys
-    # (ADVICE r1) and a silent collision merges two unrelated files'
-    # shingles. ONE aggregate job over the three key columns only (columnar
-    # pruning: content never moves), so the cost is a small fraction of any
-    # pipeline run; raises RuntimeError on collision (the fix is a 128-bit
-    # id via with_file_id(id_expr=...)). Default ON (VERDICT r2 next#8).
+    # --- SimHash channel ---
     simhash_bits: int = 64
     simhash_hamming_max: int = 3
     simhash_max_block: int = 1024

@@ -359,7 +359,7 @@ def q_regional_revenue(spark, sf_dir):
 
 def q_events_hourly(spark, sf_dir):
     """Tumbling-window aggregation over event time (streaming-shaped op in
-    batch form; watermark semantics live in streaming/incremental.py)."""
+    batch form)."""
     return (
         _read(spark, sf_dir, "events")
         .groupBy(
@@ -1390,12 +1390,9 @@ def q_winnow_overlap_pairs(spark, sf_dir):
 def q_sessionize_events(spark, sf_dir):
     """Batch sessionization of the events table (gaps-and-islands): a new
     session starts when the gap to the user's previous event exceeds 30
-    minutes -- the SAME rule the streaming applyInPandasWithState
-    sessionizer implements statefully (streaming/incremental.py:129), so
-    this oracle-checked batch twin certifies those semantics declaratively.
-    Plan: one shuffle on user_id; the lag window, the running-sum window
-    and the final groupBy all reuse that partitioning. Gap compare in
-    exact integer microseconds on both engines."""
+    minutes. Plan: one shuffle on user_id; the lag window, the running-sum
+    window and the final groupBy all reuse that partitioning. Gap compare
+    in exact integer microseconds on both engines."""
     e = _read(spark, sf_dir, "events").select("user_id", "ts", "value")
     w = Window.partitionBy("user_id").orderBy("ts")
     # ts is TIMESTAMP_NTZ: interval arithmetic keeps the gap compare exact
@@ -3428,7 +3425,7 @@ ORACLE = {
         FROM d a JOIN d b ON a.doc_id < b.doc_id
         LEFT JOIN common c ON c.id_a = a.doc_id AND c.id_b = b.doc_id
     """,
-    # batch twin of the streaming sessionizer's gap rule
+    # 30-minute gap rule, exact integer microseconds
     "sessionize_events": """
         WITH m AS (
           SELECT user_id, ts, value,

@@ -304,7 +304,7 @@ def _batched_lcs_search(entries: list) -> dict[int, int]:
     return result
 
 
-def make_lcs_containment_udf(min_containment: float | None = None):
+def make_lcs_containment_udf(min_containment: float):
     """Longest-common-substring containment: lcs_len / min(len_a, len_b).
 
     Suffix-structure channel for containment dups (north_star; no reference
@@ -313,16 +313,17 @@ def make_lcs_containment_udf(min_containment: float | None = None):
     rolling hashes (see _RollingHasher); runs only on the small pair set
     that survives candidate generation but fails the jaccard bar.
 
-    `min_containment` (the caller's filter threshold) enables a BATCHED
+    `min_containment` (the caller's filter threshold) drives a BATCHED
     gate probe (NOTES r2 item 3 / VERDICT r2 next#7): every pair's
-    length-L0 window hashes (L0 = ceil(min_containment * min_len)) are
-    concatenated, tagged (pair, side), and resolved with ONE lexsort over
-    the whole Arrow batch -- a shared (pair, key) run containing both
+    length-L0 window hashes (L0 = max(1, ceil(min_containment * min_len)))
+    are concatenated, tagged (pair, side), and resolved with ONE lexsort
+    over the whole Arrow batch -- a shared (pair, key) run containing both
     sides means the gate passes. Hashers are built once per DISTINCT
     content in the batch (a doc appears in many pairs). Failing pairs
     return 0.0 -- callers filter on >= min_containment, so the contract
-    is unchanged for them. With min_containment=None the exact value is
-    always computed (r1 behaviour; the DP-oracle tests use this).
+    is unchanged for them. min_containment=0.0 scores every pair exactly
+    (the DP-oracle tests use it): L0 is then 1, and a length-1 window key
+    is the byte itself, so the gate passes exactly the pairs with LCS >= 1.
 
     The EXACT search is batched too (r4, NOTES round-5 backlog #3): all
     still-active pairs bisect their own length ranges together, one
@@ -357,24 +358,14 @@ def make_lcs_containment_udf(min_containment: float | None = None):
             m = min(ha.n, hb.n)
             if m == 0:
                 continue
-            L0 = 0 if min_containment is None else min(
-                m, max(1, int(np.ceil(min_containment * m)))
-            )
+            L0 = min(m, max(1, int(np.ceil(min_containment * m))))
             work.append((i, ha, hb, m, L0))
         if not work:
             return out
-        if min_containment is None:
-            entries = [(i, ha, hb, 0, m) for i, ha, hb, m, _L0 in work]
-        else:
-            # gate first: only pairs sharing a length-L0 window key can
-            # reach containment >= min_containment; failures stay 0.0
-            # (callers filter on >= min_containment, contract unchanged)
-            passed = _shared_window_hits(
-                [(i, ha, hb, L0) for i, ha, hb, _m, L0 in work]
-            )
-            entries = [
-                (i, ha, hb, L0, m) for i, ha, hb, m, L0 in work if i in passed
-            ]
+        # gate first: only pairs sharing a length-L0 window key can reach
+        # containment >= min_containment; failures stay 0.0
+        passed = _shared_window_hits([(i, ha, hb, L0) for i, ha, hb, _m, L0 in work])
+        entries = [(i, ha, hb, L0, m) for i, ha, hb, m, L0 in work if i in passed]
         denom = {i: m for i, _ha, _hb, m, _L0 in work}
         for i, lcs in _batched_lcs_search(entries).items():
             out[i] = lcs / denom[i]
@@ -388,13 +379,33 @@ def make_lcs_containment_udf(min_containment: float | None = None):
     return lcs_containment
 
 
-#: exact variant (backwards-compatible name used by tests)
-lcs_containment_udf = make_lcs_containment_udf(None)
+#: S6 tuning constants.
+#:
+#: sound_prefix_pred pays while the prefix ((1-theta)/(1+theta))*n + t is a
+#: modest fraction of the array. Measured at the 200k bench corpus with
+#: t = SOUND_PREFIX_T (OPTIMIZATION_r06.md "S6 verify: SOUND positional
+#: prefix filter", identical 499,797-pair output in every rep): theta=0.5
+#: -- warm 24.7-28.0s -> 15.2-22.5s (the rejected 72% of pairs, at
+#: jaccard 0.10-0.30, skip the full hash-set build AND all downstream row
+#: machinery, beating the naive (p/n)-cost model); theta=0.9 (flagship
+#: query; the ~0.053n+t prefix rejects everything below jaccard ~0.68) --
+#: 5.6s -> 4.2s. Below theta=0.5 the sound prefix exceeds half the array
+#: and no declared query goes there, so the filter stays off.
+SOUND_PREFIX_MIN_THETA = 0.5
+SOUND_PREFIX_T = 16
+
+#: Bounds of the size-gated verify feature broadcast (join_pair_features
+#: has the measured gain). Deliberately conservative: a 512 MB relation on
+#: an 8 GB driver. Production corpora pass the row bound at once, pay only
+#: the metadata count, and keep the SHUFFLE_HASH path. Each broadcast side
+#: builds its OWN relation (the final AQE plan has two BroadcastQueryStage
+#: nodes and no ReusedExchange), so the worst case holds 2 x
+#: BROADCAST_MAX_BYTES at once.
+BROADCAST_MAX_ROWS = 4_000_000
+BROADCAST_MAX_BYTES = 512 * 1024 * 1024
 
 
-def feature_table_fits_broadcast(
-    shingled: DataFrame, cfg: PipelineConfig, with_counts: bool = True
-) -> bool:
+def feature_table_fits_broadcast(shingled: DataFrame, with_counts: bool = True) -> bool:
     """Size-adaptive broadcast decision for the verify feature join (r6,
     guide-§8 'broadcast the plan'): True iff the feature table is small
     enough to ship to every executor instead of re-shuffling the wide
@@ -402,15 +413,11 @@ def feature_table_fits_broadcast(
 
     Two-step probe so the decision itself stays O(metadata) at scale:
     (1) count(*) -- parquet-count pushdown on checkpointed stages, cached
-    count on persisted ones; over the row bound the answer is 'no' with no
-    further work. (2) only under the row bound (a small table by
+    count on persisted ones; over BROADCAST_MAX_ROWS the answer is 'no'
+    with no further work. (2) only under the row bound (a small table by
     definition), one aggregate over array sizes estimates the broadcast
-    payload. Both knobs ship in PipelineConfig; <= 0 disables."""
-    max_rows = int(cfg.verify_broadcast_max_rows)
-    if max_rows <= 0:
-        return False
-    n = shingled.count()
-    if n > max_rows:
+    payload against BROADCAST_MAX_BYTES."""
+    if shingled.count() > BROADCAST_MAX_ROWS:
         return False
     row = shingled.agg(
         F.count("*").alias("n"),
@@ -421,7 +428,7 @@ def feature_table_fits_broadcast(
     est = row.n * 32 + row.tot * 8
     if with_counts:
         est += row.tot * 4 + row.n * 8
-    return est <= int(cfg.verify_broadcast_max_bytes)
+    return est <= BROADCAST_MAX_BYTES
 
 
 def join_pair_features(
@@ -452,11 +459,11 @@ def join_pair_features(
     size-gated b-side broadcast", identical 499,797-pair output by
     checksum: warm ~25s -> ~22s, cold 87s -> 20s; pipeline S6 stage 37.3s
     -> ~22s). The a-side then broadcasts TOO (OPTIMIZATION_r06.md "S6
-    verify: a-side broadcast reuse"): the two broadcast subtrees are
-    canonically identical, so AQE's stage cache builds the relation once
-    and the candidates stream never shuffles at all -- verify wall
-    17.2-24.9s -> 14.4-20.0s, winning 6/7 interleaved reps, output
-    identical by count + xxhash64 checksum."""
+    verify: a-side broadcast reuse"), so the candidates stream never
+    shuffles at all -- verify wall 17.2-24.9s -> 14.4-20.0s, winning 6/7
+    interleaved reps, output identical by count + xxhash64 checksum. The
+    two sides do NOT share one relation: each builds and ships its own
+    broadcast (see BROADCAST_MAX_BYTES for the memory this costs)."""
     cols = [F.col("file_id").alias("fid"), F.col("shingles")]
     if with_counts:
         cols += [F.col("counts"), F.col("n_tokens")]
@@ -482,7 +489,7 @@ def join_pair_features(
 
 def sound_prefix_pred(theta: float, t: int):
     """SOUND necessary condition for jaccard(sh_a, sh_b) >= theta
-    (cfg.verify_sound_prefix_t; PPJoin t-occurrence lemma, Xiao et al.
+    (SOUND_PREFIX_T; PPJoin t-occurrence lemma, Xiao et al.
     WWW'08). Requires both arrays sorted by the same global total order --
     the shingle UDF's sorted-distinct output contract.
 
@@ -515,18 +522,6 @@ def sound_prefix_pred(theta: float, t: int):
     return shared >= t_eff
 
 
-#: sound_prefix_pred pays while the prefix ((1-theta)/(1+theta))*n + t is a
-#: modest fraction of the array. Measured at the 200k bench corpus
-#: (OPTIMIZATION_r06.md "S6 verify: SOUND positional prefix filter",
-#: identical 499,797-pair output in every rep): theta=0.5, t=16 -- warm
-#: 24.7-28.0s -> 15.2-22.5s (the rejected 72% of pairs skip the full
-#: hash-set build AND all downstream row machinery, beating the naive
-#: (p/n)-cost model); theta=0.9 (flagship query, t=16) --
-#: 5.6s -> 4.2s. Below theta=0.5 the sound prefix exceeds half the array
-#: and no declared query goes there, so the filter stays off.
-SOUND_PREFIX_MIN_THETA = 0.5
-
-
 def verify_pairs(
     candidates: DataFrame,
     shingled: DataFrame,
@@ -546,7 +541,7 @@ def verify_pairs(
            jaccard  <= min(|A|, |B|) / max(|A|, |B|)      (distinct sizes)
            overlap  <= min(nt_A, nt_B) / max(nt_A, nt_B)  (multiset totals)
        and, on the jaccard-only channel, the PPJoin prefix check
-       (sound_prefix_pred, cfg.verify_sound_prefix_t);
+       (sound_prefix_pred, SOUND_PREFIX_T);
     3. exact scoring, one scorer per channel: jaccard-only uses the JVM
        `array_intersect` (the per-pair pandas probe lost ~2x end-to-end --
        Arrow transfer of the arrays costs more than the JVM hash build it
@@ -559,9 +554,7 @@ def verify_pairs(
         candidates,
         shingled,
         with_counts=with_overlap,
-        broadcast_b=feature_table_fits_broadcast(
-            shingled, cfg, with_counts=with_overlap
-        ),
+        broadcast_b=feature_table_fits_broadcast(shingled, with_counts=with_overlap),
     )
     sz_a, sz_b = F.size("sh_a").cast("double"), F.size("sh_b").cast("double")
     jac_bound = F.least(sz_a, sz_b) / F.greatest(F.greatest(sz_a, sz_b), F.lit(1.0))
@@ -595,10 +588,9 @@ def verify_pairs(
     else:
         if not keep_all:
             joined = joined.filter(jac_bound >= F.lit(cfg.jaccard_threshold) - eps)
-            t = cfg.verify_sound_prefix_t
-            if t and t > 0 and cfg.jaccard_threshold >= SOUND_PREFIX_MIN_THETA:
+            if cfg.jaccard_threshold >= SOUND_PREFIX_MIN_THETA:
                 joined = joined.filter(
-                    sound_prefix_pred(cfg.jaccard_threshold, int(t))
+                    sound_prefix_pred(cfg.jaccard_threshold, SOUND_PREFIX_T)
                 )
         inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         union = sz_a + sz_b - inter
@@ -615,12 +607,12 @@ def verify_pairs(
 
 
 def add_lcs_containment(
-    pairs: DataFrame, files: DataFrame, min_containment: float | None = None
+    pairs: DataFrame, files: DataFrame, min_containment: float
 ) -> DataFrame:
     """Containment channel: join `files.content` back (only for the
     surviving pairs -- a tiny fraction of the corpus) and score LCS
-    containment. Pass the downstream filter threshold as `min_containment`
-    to enable the cheap gate probe (see make_lcs_containment_udf)."""
+    containment. `min_containment` is the downstream filter threshold;
+    pairs below it score 0.0 (see make_lcs_containment_udf)."""
     udf = make_lcs_containment_udf(min_containment)
     c = files.select(F.col("file_id").alias("fid"), F.col("content").alias("c"))
     a = c.select(F.col("fid").alias("id_a"), F.col("c").alias("content_a"))

@@ -109,7 +109,9 @@ def with_file_id(
     count(distinct file_id) in ONE aggregate job and raises on mismatch.
     The audit scans only the three key columns (columnar pruning -- content
     never moves), so its cost is a small fraction of any real run;
-    `run_pipeline` runs it by default (cfg.check_id_collisions).
+    `run_pipeline` always runs it. The key is counted as one struct: a
+    multi-column countDistinct skips every row with a null key column,
+    while xxhash64 still gives those rows ids.
 
     `id_expr` overrides the id column (tests force collisions with it; a
     128-bit-per-half strategy would pass e.g. one sha2 half here)."""
@@ -119,7 +121,7 @@ def with_file_id(
     )
     if check_collisions:
         row = out.agg(
-            F.countDistinct("repo", "path", "commit").alias("nk"),
+            F.countDistinct(F.struct("repo", "path", "commit")).alias("nk"),
             F.countDistinct("file_id").alias("ni"),
         ).first()
         if row.nk != row.ni:
@@ -186,7 +188,7 @@ def run_pipeline(
         spark, checkpoint_dir, metrics=RunMetrics(config_id=cfg.config_id)
     )
 
-    ids = with_file_id(code_files, check_collisions=cfg.check_id_collisions)
+    ids = with_file_id(code_files, check_collisions=True)
 
     # S1: shingle + sha.
     shingled = store.materialize("files_shingled", shingle_stage(ids, cfg))

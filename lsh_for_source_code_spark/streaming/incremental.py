@@ -12,7 +12,7 @@ example is provided for completeness of the API surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from lsh_for_source_code_spark.caching import track
 from lsh_for_source_code_spark.config import PipelineConfig
@@ -88,176 +88,6 @@ def incremental_update(
         "delta_bands": d_bands,
         "verified_new_pairs": verified,
     }
-
-
-def streaming_event_rollup(
-    spark,
-    input_path: str,
-    checkpoint: str,
-    window_duration: str = "1 hour",
-    watermark: str = "1 hour",
-):
-    """Watermarked tumbling-window aggregation over an event stream
-    (SURVEY.md 2.5 streaming category: windowed aggs + late-data handling).
-
-    readStream(events) -> withWatermark(ts) -> window(ts) x event_type ->
-    count/avg -> append sink. Append mode emits a window only once the
-    watermark passes its end, and rows later than the watermark are dropped
-    -- the exactly-once rollup shape for the events table at 100 TB (state
-    store holds only open windows; watermark bounds state size).
-
-    Returns the DataStreamWriter (caller picks trigger/path); tests drive it
-    with trigger(availableNow=True) across two batches to observe both
-    window finalization and late-row dropping.
-    """
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(input_path)
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.avg("value"), 6).alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("path", checkpoint + "_out")
-        .trigger(availableNow=True)
-    )
-
-
-def streaming_sessionize(
-    spark,
-    input_path: str,
-    checkpoint: str,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-):
-    """Custom stateful streaming operator (SURVEY.md 2.5 streaming category):
-    per-user sessionization with applyInPandasWithState.
-
-    State per user_id: (session_start, last_ts, n_events, sum_value). A new
-    event more than `gap_minutes` after the last one closes the session and
-    emits it; event-time timeout (watermark + gap) closes idle sessions.
-    This is the applyInPandasWithState shape for any custom per-key state
-    machine (the engine's stand-in for operators Spark lacks natively).
-
-    Gap rule is EXACT MICROSECONDS (r4s3) -- bit-identical semantics to the
-    oracle-checked batch twin `entry_queries.q_sessionize_events`, which a
-    test asserts; the earlier millisecond truncation could disagree with
-    the batch rule for gaps within 1ms of the threshold.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", IntegerType()),
-            StructField("sum_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_us", LongType()),
-            StructField("last_us", LongType()),
-            StructField("n", IntegerType()),
-            StructField("sv", DoubleType()),
-        ]
-    )
-    gap_us = gap_minutes * 60_000_000
-
-    def sessionize(key, pdfs, state: GroupState):
-        (user_id,) = key
-        sessions = []
-        if state.hasTimedOut:
-            start_us, last_us, n, sv = state.get
-            sessions.append((user_id, start_us, last_us, n, sv))
-            state.remove()
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            rows = rows.sort_values("ts")
-            ts_us = (rows["ts"].astype("int64") // 1_000).to_numpy()
-            vals = rows["value"].to_numpy()
-            if state.exists:
-                start_us, last_us, n, sv = state.get
-            else:
-                start_us, last_us, n, sv = int(ts_us[0]), int(ts_us[0]) - 1, 0, 0.0
-            for t, v in zip(ts_us, vals):
-                t = int(t)
-                if n > 0 and t - last_us > gap_us:
-                    sessions.append((user_id, start_us, last_us, n, sv))
-                    start_us, n, sv = t, 0, 0.0
-                if n == 0:
-                    start_us = t
-                last_us, n, sv = t, n + 1, sv + float(v)
-            state.update((start_us, last_us, n, sv))
-            # timeout API takes epoch MILLIS; round up so it never fires
-            # a microsecond early
-            state.setTimeoutTimestamp(-(-(last_us + gap_us) // 1000))
-        if not sessions:
-            yield pd.DataFrame(
-                columns=["user_id", "session_start", "session_end", "n_events", "sum_value"]
-            )
-        else:
-            df = pd.DataFrame(
-                sessions,
-                columns=["user_id", "session_start", "session_end", "n_events", "sum_value"],
-            )
-            df["session_start"] = pd.to_datetime(df["session_start"], unit="us")
-            df["session_end"] = pd.to_datetime(df["session_end"], unit="us")
-            yield df
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(input_path)
-    )
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        sessions.writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("path", checkpoint + "_out")
-        .trigger(availableNow=True)
-    )
 
 
 def streaming_ingest(spark, input_path: str, checkpoint: str, cfg: PipelineConfig):

@@ -65,173 +65,3 @@ def test_streaming_ingest_available_now(spark, tmp_path):
     assert len(rows) == 4
     assert all(len(r.minhash) == 16 for r in rows)
     assert all(r.content_sha for r in rows)
-
-
-def test_streaming_event_rollup_watermark_and_late_drop(spark, tmp_path):
-    """Watermarked windowed agg (streaming category, SURVEY 2.5): windows
-    finalize only after the watermark passes, and rows later than the
-    watermark are dropped from already-closed windows."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from lsh_for_source_code_spark.streaming.incremental import (
-        streaming_event_rollup,
-    )
-
-    src = str(tmp_path / "events_in")
-    ck = str(tmp_path / "ck_rollup")
-
-    def write_batch(rows, name):
-        pdf = pd.DataFrame(rows)
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf).select(
-            F.col("event_id").cast("long"),
-            F.col("ts").cast("timestamp"),
-            F.col("user_id").cast("long"),
-            F.col("event_type").cast("string"),
-            F.col("value").cast("double"),
-            F.col("props").cast("string"),
-        ).write.mode("append").parquet(src)
-
-    def run_once():
-        q = streaming_event_rollup(spark, src, ck).start()
-        q.awaitTermination(120)
-
-    base = {"user_id": 1, "props": "{}"}
-    # batch 1: two events at 10:00h, one at 13:00h (advances watermark to 12:00)
-    write_batch(
-        [
-            dict(base, event_id=1, ts="2026-01-01 10:05:00", event_type="a", value=1.0),
-            dict(base, event_id=2, ts="2026-01-01 10:20:00", event_type="a", value=3.0),
-            dict(base, event_id=3, ts="2026-01-01 13:00:00", event_type="a", value=5.0),
-        ],
-        "b1",
-    )
-    run_once()
-    # batch 2: a LATE row for the closed 10:00 window (behind the 12:00
-    # watermark -> dropped) plus a fresh row advancing the watermark so the
-    # 13:00 window finalizes too
-    write_batch(
-        [
-            dict(base, event_id=4, ts="2026-01-01 10:30:00", event_type="a", value=100.0),
-            dict(base, event_id=5, ts="2026-01-01 16:00:00", event_type="a", value=7.0),
-        ],
-        "b2",
-    )
-    run_once()
-
-    out = spark.read.parquet(ck + "_out")
-    rows = {
-        (r.window_start.hour, r.event_type): (r.n_events, r.avg_value)
-        for r in out.collect()
-    }
-    # 10:00 window finalized from batch 1 only -- the late row did NOT land
-    assert rows[(10, "a")] == (2, 2.0), rows
-    # 13:00 window finalized once batch 2 advanced the watermark
-    assert rows[(13, "a")] == (1, 5.0), rows
-
-
-def test_streaming_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: gap-split within a batch,
-    state carried across batches, idle sessions closed by event-time
-    timeout."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from lsh_for_source_code_spark.streaming.incremental import (
-        streaming_sessionize,
-    )
-
-    src = str(tmp_path / "sess_in")
-    ck = str(tmp_path / "ck_sess")
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(rows)
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf).select(
-            F.col("event_id").cast("long"),
-            F.col("ts").cast("timestamp"),
-            F.col("user_id").cast("long"),
-            F.col("event_type").cast("string"),
-            F.col("value").cast("double"),
-            F.col("props").cast("string"),
-        ).write.mode("append").parquet(src)
-
-    def run_once():
-        q = streaming_sessionize(spark, src, ck, gap_minutes=30).start()
-        q.awaitTermination(120)
-
-    base = {"event_type": "a", "props": "{}"}
-    # user 1: two events 10 min apart (one session), then a 2h gap (split)
-    write_batch(
-        [
-            dict(base, event_id=1, user_id=1, ts="2026-01-01 10:00:00", value=1.0),
-            dict(base, event_id=2, user_id=1, ts="2026-01-01 10:10:00", value=2.0),
-            dict(base, event_id=3, user_id=1, ts="2026-01-01 12:10:00", value=4.0),
-        ]
-    )
-    run_once()
-    # batch 2: far-future event for user 2 advances the watermark past
-    # user 1's timeout -> their open session closes via EventTimeTimeout
-    write_batch(
-        [dict(base, event_id=4, user_id=2, ts="2026-01-01 20:00:00", value=9.0)]
-    )
-    run_once()
-
-    out = spark.read.parquet(ck + "_out")
-    got = {
-        (r.user_id, r.session_start.strftime("%H:%M"), r.n_events, r.sum_value)
-        for r in out.collect()
-    }
-    assert (1, "10:00", 2, 3.0) in got, got   # gap-split session (batch 1)
-    assert (1, "12:10", 1, 4.0) in got, got   # closed by event-time timeout
-
-
-def test_streaming_sessionize_matches_batch_twin(spark, tmp_path):
-    """The stateful streaming sessionizer and the oracle-checked batch
-    twin (entry_queries.q_sessionize_events) implement the SAME 30-minute
-    exact-microsecond gap rule: every session the stream emits (closed by
-    gap or by event-time timeout as the availableNow run drains) must
-    appear bit-for-bit in the batch result -- same start/end micros, same
-    count, same sum. Certifies the applyInPandasWithState machine against
-    a declarative, DuckDB-oracled definition."""
-    import math
-
-    from lsh_for_source_code_spark.entry_queries import q_sessionize_events
-    from lsh_for_source_code_spark.streaming.incremental import (
-        streaming_sessionize,
-    )
-
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "events_src")
-    (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .write.parquet(src)
-    )
-    ck = str(tmp_path / "sess_ck")
-    q = streaming_sessionize(
-        spark, src, ck, gap_minutes=30, watermark="0 seconds"
-    ).start()
-    q.awaitTermination(180)
-    got = spark.read.parquet(ck + "_out").toPandas()
-    batch = q_sessionize_events(spark, "/root/testdata/sf0.001").toPandas()
-
-    def keyed(df):
-        return {
-            (int(r.user_id), r.session_start.value, r.session_end.value): (
-                int(r.n_events),
-                float(r.sum_value),
-            )
-            for r in df.itertuples()
-        }
-
-    gs, bs = keyed(got), keyed(batch)
-    assert len(gs) > 50, f"stream emitted only {len(gs)} sessions"
-    missing = [k for k in gs if k not in bs]
-    assert not missing, f"stream sessions absent from batch twin: {missing[:5]}"
-    for k, (n, sv) in gs.items():
-        bn, bsv = bs[k]
-        assert n == bn, (k, n, bn)
-        assert math.isclose(sv, bsv, rel_tol=0, abs_tol=5e-4), (k, sv, bsv)

@@ -341,7 +341,7 @@ def test_lcs_udf_impls_agree():
         pairs_b.append(tail + base[: rng.integers(0, len(base) + 1)])
     pairs_a += ["", "abc"]
     pairs_b += ["xyz", ""]
-    hash_scores = make_lcs_containment_udf(None)._plain_batch(pairs_a, pairs_b)
+    hash_scores = make_lcs_containment_udf(0.0)._plain_batch(pairs_a, pairs_b)
     sa_scores = np.zeros(len(pairs_a))
     for i, (a, b) in enumerate(zip(pairs_a, pairs_b)):
         ca = np.frombuffer(a.encode("utf-8"), dtype=np.uint8)

@@ -279,10 +279,7 @@ def test_lcs_containment_channel(spark):
     jaccard/overlap bar but caught by the LCS channel."""
     import pandas as pd
 
-    from lsh_for_source_code_spark.operators.verify import (
-        add_lcs_containment,
-        lcs_containment_udf,
-    )
+    from lsh_for_source_code_spark.operators.verify import make_lcs_containment_udf
 
     inner = "\n".join(f"int v{i} = compute_{i}(x{i});" for i in range(30))
     host = (
@@ -294,7 +291,7 @@ def test_lcs_containment_channel(spark):
         pd.DataFrame({"content_a": [inner, "abc"], "content_b": [host, "xyz"]})
     )
     rows = df.withColumn(
-        "c", lcs_containment_udf("content_a", "content_b")
+        "c", make_lcs_containment_udf(0.0)("content_a", "content_b")
     ).collect()
     assert rows[0].c > 0.95  # inner is contained verbatim
     assert rows[1].c < 0.5
@@ -379,7 +376,10 @@ def test_lcs_gate_key_budget_slicing_preserves_results(monkeypatch):
 def test_file_id_collision_audit_raises(spark):
     """Forced 1-bit id space => certain collision => audit must raise
     (VERDICT r2 next#8). id_expr is the test hook; production uses the
-    full 64-bit xxhash."""
+    full 64-bit xxhash. Null key columns: distinct keys with a null
+    column must count as distinct (no false alarm), while two keys that
+    differ only in where the null sits hash alike (xxhash64 skips nulls)
+    and must raise."""
     df, _ = corpus_df(spark, n_files=20, seed=3)
     with pytest.raises(RuntimeError, match="collision"):
         with_file_id(
@@ -388,11 +388,19 @@ def test_file_id_collision_audit_raises(spark):
             id_expr=F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(2)),
         ).count()
 
+    schema = "repo string, path string, commit string"
+    null_commit = spark.createDataFrame(
+        [("r", "a", "c"), ("r", "b", "c"), ("r", "c", None)], schema
+    )
+    assert with_file_id(null_commit, check_collisions=True).count() == 3
+    shifted_null = spark.createDataFrame([("r", "b", None), ("r", None, "b")], schema)
+    with pytest.raises(RuntimeError, match="2 natural keys -> 1 ids"):
+        with_file_id(shifted_null, check_collisions=True)
+
 
 def test_run_pipeline_runs_collision_audit_by_default(spark, monkeypatch):
-    """run_pipeline must wire cfg.check_id_collisions (default ON) into the
-    audit: with the id space squeezed to 1 bit, the pipeline raises before
-    any downstream stage; with the flag off it proceeds to build a plan."""
+    """run_pipeline always runs the id audit: with the id space squeezed
+    to 1 bit, the pipeline raises before any downstream stage."""
     import lsh_for_source_code_spark.plans.pipeline as pl
 
     orig = pl.with_file_id
@@ -408,17 +416,13 @@ def test_run_pipeline_runs_collision_audit_by_default(spark, monkeypatch):
     df, _ = corpus_df(spark, n_files=20, seed=3)
     with pytest.raises(RuntimeError, match="collision"):
         pl.run_pipeline(spark, df, CFG)
-    out = pl.run_pipeline(
-        spark, df, PipelineConfig(check_id_collisions=False)
-    )
-    assert "clusters" in out
 
 
 def test_lcs_hybrid_search_matches_per_pair_across_crossover():
     """The r4 hybrid exact-LCS search (batched bisection below
     _LCS_BATCH_SEARCH_MAX_BYTES combined size, per-pair numpy probes
-    above) must be bisection-identical to the pure per-pair search on a
-    batch that straddles the crossover, in both exact and gated modes."""
+    above) must match the pure per-pair search on a batch that straddles
+    the crossover, in both exact (min_containment 0.0) and gated modes."""
     import numpy as np
 
     from lsh_for_source_code_spark.operators import verify as V
@@ -433,7 +437,7 @@ def test_lcs_hybrid_search_matches_per_pair_across_crossover():
     ia, ib = rng.integers(0, 80, 400), rng.integers(0, 80, 400)
     A = [docs[i] for i in ia]
     B = [docs[i] for i in ib]
-    for mc in (None, 0.3, 0.8):
+    for mc in (0.0, 0.3, 0.8):
         got = V.make_lcs_containment_udf(mc)._plain_batch(A, B)
         ref = np.zeros(len(A))
         hashers: dict = {}
@@ -450,7 +454,7 @@ def test_lcs_hybrid_search_matches_per_pair_across_crossover():
             m = min(ha.n, hb.n)
             if m == 0:
                 continue
-            if mc is None:
+            if mc == 0.0:
                 ref[i] = V._lcs_len_from(ha, hb, 0, m) / m
             else:
                 L0 = min(m, max(1, int(np.ceil(mc * m))))
@@ -473,16 +477,14 @@ def test_config_rejects_bad_simhash_layout():
         PipelineConfig(mega_chunk_target=1)
 
 
-def test_verify_broadcast_gate_output_identical(spark):
+def test_verify_broadcast_gate_output_identical(spark, monkeypatch):
     """The size-gated verify feature join has two shapes -- both sides
     broadcast (gate passes; r6 resumed session broadcasts the a-side
     too) vs two pinned SHUFFLE_HASH joins (gate off, the production
     fallback). They must produce the identical verified pair set with
     identical jaccard values."""
-    import dataclasses
-
     from lsh_for_source_code_spark.functions.minhash import sign_files
-    from lsh_for_source_code_spark.operators.verify import verify_pairs
+    from lsh_for_source_code_spark.operators import verify
     from lsh_for_source_code_spark.plans.pipeline import (
         lsh_stages,
         shingle_stage,
@@ -493,16 +495,16 @@ def test_verify_broadcast_gate_output_identical(spark):
     cfg = PipelineConfig()
     shingled = shingle_stage(with_file_id(df), cfg)
     _, cands, _ = lsh_stages(sign_files(shingled, cfg), shingled, cfg)
-    results = {}
-    for name, c in (
-        ("bcast", cfg),
-        ("shj", dataclasses.replace(cfg, verify_broadcast_max_rows=0)),
-    ):
-        results[name] = sorted(
+
+    def verified():
+        return sorted(
             (r.id_a, r.id_b, round(r.jaccard, 9))
-            for r in verify_pairs(cands, shingled, c).collect()
+            for r in verify.verify_pairs(cands, shingled, cfg).collect()
         )
-    assert results["bcast"] == results["shj"] and results["bcast"]
+
+    bcast = verified()
+    monkeypatch.setattr(verify, "BROADCAST_MAX_ROWS", 0)
+    assert verified() == bcast and bcast
 
 
 def test_pipeline_survives_ansi_mode(spark):

@@ -13,8 +13,6 @@ is the regression net.
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 import pytest
 
 from lsh_for_source_code_spark.entry_queries import QUERIES
@@ -200,12 +198,11 @@ def test_join_strategy_discipline(spark):
     wide array rows; an unconditional broadcast of a corpus-sized side is
     a driver-serial collect -- the measured r1 scaling floor, BENCH_NOTES
     #4). r6: the B-SIDE verify feature join broadcasts when the feature
-    table fits cfg.verify_broadcast_max_rows/_bytes (guide-§8: the wide
+    table fits verify.BROADCAST_MAX_ROWS/_BYTES (guide-§8: the wide
     pair+sh_a intermediate then never crosses an exchange; r6 resumed
-    session: BOTH feature sides broadcast under the gate -- the identical
-    subtrees share one AQE-cached relation and the candidates stream
-    never shuffles); at sf0.001 the bound is met, so BroadcastHashJoins
-    are expected for the feature joins."""
+    session: BOTH feature sides broadcast under the gate, so the
+    candidates stream never shuffles); at sf0.001 the bound is met, so
+    BroadcastHashJoins are expected for the feature joins."""
     p = _plan(spark, QUERIES["broadcast_dim_join"](spark, SF_DIR))
     assert "BroadcastHashJoin" in p
     p = _plan(spark, QUERIES["near_dup_pairs"](spark, SF_DIR))
@@ -214,22 +211,23 @@ def test_join_strategy_discipline(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_verify_broadcast_gate_disables(spark):
-    """With the broadcast bounds disabled (<= 0), the verify feature join
-    must fall back to the two pinned SHUFFLE_HASH joins -- the production
-    shape for corpora whose feature table cannot ship to every executor."""
+def test_verify_broadcast_gate_disables(spark, monkeypatch):
+    """Over the broadcast row bound, the verify feature join must fall back
+    to the two pinned SHUFFLE_HASH joins -- the production shape for
+    corpora whose feature table cannot ship to every executor."""
     from pyspark.sql import functions as F
 
     from lsh_for_source_code_spark.entry_queries import (
         FLAGSHIP_CFG,
         lsh_verified_pairs,
     )
+    from lsh_for_source_code_spark.operators import verify
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
         F.col("doc_id") % 5 == 0
     )
-    cfg = replace(FLAGSHIP_CFG, verify_broadcast_max_rows=0)
-    p = _plan(spark, lsh_verified_pairs(docs, cfg, 0.9))
+    monkeypatch.setattr(verify, "BROADCAST_MAX_ROWS", 0)
+    p = _plan(spark, lsh_verified_pairs(docs, FLAGSHIP_CFG, 0.9))
     assert "BroadcastHashJoin" not in p
     assert "ShuffledHashJoin" in p
 

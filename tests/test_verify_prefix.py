@@ -1,7 +1,8 @@
-"""Sound positional prefix filter (cfg.verify_sound_prefix_t, r6).
+"""Sound positional prefix filter (verify.SOUND_PREFIX_T, r6).
 
 The filter must be EXACT: it may only drop pairs whose jaccard is provably
-below threshold, so the verified output is identical with it on or off.
+below threshold, so the verified output equals the unfiltered exact scores
+thresholded at theta.
 Covers the PPJoin t-occurrence lemma predicate directly (random sets,
 soundness at the threshold boundary) and the operator end-to-end.
 """
@@ -84,20 +85,16 @@ def test_prefix_pred_rejects_disjoint(spark):
 
 @pytest.mark.parametrize("theta", [0.5, 0.9])
 def test_verify_pairs_identical_with_filter(spark, small_corpus_shingled, theta):
-    """End-to-end: verify_pairs output is byte-identical with the sound
-    prefix filter on vs off (both production thetas, jaccard-only channel)."""
+    """End-to-end: verify_pairs output (sound prefix filter on) is
+    byte-identical to the unfiltered exact scores (keep_all) thresholded at
+    theta (both production thetas, jaccard-only channel)."""
     shingled, cands, base_cfg = small_corpus_shingled
-    cfg_on = dataclasses.replace(
-        base_cfg,
-        jaccard_threshold=theta,
-        overlap_threshold=None,
-        verify_sound_prefix_t=16,
+    cfg = dataclasses.replace(
+        base_cfg, jaccard_threshold=theta, overlap_threshold=None
     )
-    cfg_off = dataclasses.replace(cfg_on, verify_sound_prefix_t=None)
-    assert cfg_on.jaccard_threshold >= SOUND_PREFIX_MIN_THETA
+    assert cfg.jaccard_threshold >= SOUND_PREFIX_MIN_THETA
 
-    def sig(cfg):
-        out = verify_pairs(cands, shingled, cfg)
+    def sig(out):
         row = out.agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("id_a", "id_b")).alias("chk"),
@@ -105,9 +102,14 @@ def test_verify_pairs_identical_with_filter(spark, small_corpus_shingled, theta)
         ).first()
         return (row.n, row.chk, row.js)
 
-    s_on, s_off = sig(cfg_on), sig(cfg_off)
-    assert s_on == s_off
-    assert s_on[0] > 0  # non-trivial corpus: some pairs actually verify
+    s_filtered = sig(verify_pairs(cands, shingled, cfg))
+    s_exact = sig(
+        verify_pairs(cands, shingled, cfg, keep_all=True).filter(
+            F.col("jaccard") >= theta
+        )
+    )
+    assert s_filtered == s_exact
+    assert s_filtered[0] > 0  # non-trivial corpus: some pairs actually verify
 
 
 def test_filter_inactive_below_min_theta(spark, small_corpus_shingled):
@@ -115,10 +117,7 @@ def test_filter_inactive_below_min_theta(spark, small_corpus_shingled):
     prefix slice (the measured no-win regime stays untouched)."""
     shingled, cands, base_cfg = small_corpus_shingled
     cfg = dataclasses.replace(
-        base_cfg,
-        jaccard_threshold=0.5,
-        overlap_threshold=None,
-        verify_sound_prefix_t=16,
+        base_cfg, jaccard_threshold=0.5, overlap_threshold=None
     )
     marker = "array_intersect(slice("  # unique to the prefix filter
     cfg_lo = dataclasses.replace(cfg, jaccard_threshold=0.4)
